@@ -79,13 +79,16 @@ def fill_nulls_with_mean(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
     Two-pass: a 1-row global agg of per-column means, broadcast-joined
     back (no driver round-trip, no collect) — survives any scale because
-    the agg output is one row regardless of input size.
+    the agg output is one row regardless of input size. One projection
+    fills every column in place, so the column order is unchanged.
     """
+    fill = set(cols)
     means = df.agg(*[F.avg(c).alias(f"__mean_{c}") for c in cols])
-    filled = df.crossJoin(F.broadcast(means))
-    for c in cols:
-        filled = filled.withColumn(c, F.coalesce(F.col(c), F.col(f"__mean_{c}")))
-    return filled.drop(*[f"__mean_{c}" for c in cols])
+    return df.crossJoin(F.broadcast(means)).select(*[
+        F.coalesce(F.col(c), F.col(f"__mean_{c}")).alias(c) if c in fill
+        else F.col(c)
+        for c in df.columns
+    ])
 
 
 def month_range(spark: SparkSession, start: str, end: str) -> DataFrame:
@@ -121,10 +124,11 @@ def upsert_new_rows(incoming: DataFrame, target: DataFrame,
     UPDATE col=col is an insert-if-absent. Batch form: dedup incoming on
     the key, anti-join against the target, append. The caller writes the
     result with ``mode('append')`` (see sources.sinks for the JDBC path).
+    The target side is not deduplicated: an anti-join's result does not
+    depend on duplicate keys on its right side.
     """
     fresh = dedup_by_key(incoming, keys)
-    return fresh.join(target.select(*keys).dropDuplicates(list(keys)),
-                      on=list(keys), how="left_anti")
+    return fresh.join(target.select(*keys), on=list(keys), how="left_anti")
 
 
 # ---------------------------------------------------------------------------

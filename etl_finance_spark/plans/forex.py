@@ -4,13 +4,16 @@
 The reference aligns two date-keyed dicts with a pandas transpose
 (etl.py:397) — semantically a full outer join on date — then computes
 day-over-day deltas with a global shift. Here: an explicit full outer
-join, mean-fill on the unmatched side, and lag windows.
+join, then mean-fill and lag in per-currency windows.
 
 Scale note: a single daily series has no entity key, so the delta
 window would be one partition; the engine instead *unpivots* to
 (date, currency, rate), partitions the lag by currency, and pivots
 back — the same result with per-currency parallelism, which is the
-shape that survives when "5 currencies" becomes 50k instruments.
+shape that survives when "5 currencies" becomes 50k instruments. After
+the unpivot each currency partition holds exactly one rate column, so
+the mean-fill is a window aggregate over that same partition: one
+exchange feeds both, with no global aggregate and no broadcast join.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from etl_finance_spark.operators.core import fill_nulls_with_mean
 from etl_finance_spark.sources.sinks import write_upsert
 
 CURRENCIES = ("eur", "gbp", "sek", "dkk")
@@ -49,24 +51,29 @@ def align_sources(rates: DataFrame, btc: DataFrame) -> DataFrame:
 
 
 def clean_forex(df: DataFrame) -> DataFrame:
-    """R-NULL-1 + R-CAST-1 (etl.py:404-412)."""
-    cast = df.select(
+    """R-CAST-1 (etl.py:404-412). The R-NULL-1 mean-fill of the same
+    lines runs in transform_forex's per-currency window."""
+    return df.select(
         "short_date", *[F.col(c).cast("double").alias(c) for c in RATE_COLS]
     )
-    return fill_nulls_with_mean(cast, list(RATE_COLS))
 
 
 def transform_forex(df: DataFrame) -> DataFrame:
-    """R-WIN-1 (etl.py:415-426): day-over-day pct deltas for all five
-    rates, null→0 on the first day — via unpivot → per-currency lag →
-    pivot, so the window parallelizes by currency instead of running
-    one global partition."""
+    """R-NULL-1 + R-WIN-1 (etl.py:404-426): null rates filled with
+    their currency's mean, then day-over-day pct deltas for all five
+    rates, null→0 on the first day — via unpivot → per-currency mean
+    and lag → pivot, so the windows parallelize by currency instead of
+    running one global partition."""
     long = df.unpivot("short_date", list(RATE_COLS), "currency", "rate")
-    w = Window.partitionBy("currency").orderBy("short_date")
+    by_currency = Window.partitionBy("currency")
+    w = by_currency.orderBy("short_date")
+    filled = long.withColumn(
+        "rate", F.coalesce(F.col("rate"), F.avg("rate").over(by_currency))
+    )
     delta = F.coalesce(
         F.try_divide(F.col("rate"), F.lag("rate", 1).over(w)) - 1, F.lit(0.0)
     )
-    long = long.withColumn("delta", delta)
+    long = filled.withColumn("delta", delta)
     wide = (
         long.groupBy("short_date")
         .pivot("currency", list(RATE_COLS))

@@ -30,10 +30,11 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Modules that register queries. Imported lazily by collect() so partial
-# breakage in one family can't take down the whole surface. Import order
-# no longer decides the driver's correctness window — _DRIVER_WINDOW
-# below does, explicitly and per-query.
+# Modules that register queries, imported by collect(). An import error
+# in any of them propagates: a silently partial surface would drop its
+# queries from the driver's run without a trace. Import order does not
+# decide the driver's correctness window — _DRIVER_WINDOW below does,
+# explicitly and per-query.
 _QUERY_MODULES = (
     "etl_finance_spark.llm.dedup",
     "etl_finance_spark.llm.similarity",

@@ -53,21 +53,46 @@ def write_upsert(spark: SparkSession, incoming: DataFrame, path: str,
     """R-SNK-2: insert-if-absent on the key against a parquet target.
     Creates the target on first write. (On a Delta/Iceberg catalog this
     is `MERGE WHEN NOT MATCHED THEN INSERT`; plain parquet gets the
-    equivalent anti-join append.)"""
-    from pyspark.errors import AnalysisException
+    equivalent anti-join append.)
+
+    Only a missing path means "first write". An existing target is
+    read for its key columns with a schema taken from ``incoming``, so
+    no schema-inference job runs per load. An explicit-schema read
+    alone would return NULL for a key column the files lack, and the
+    anti-join would then append every row again; one driver-side
+    footer read of one data file keeps the check inference gave: a
+    missing key column raises ValueError, a directory with no data
+    files raises ValueError, and a file that is not parquet raises
+    from the footer read. All three raise before anything is
+    appended."""
+    from pyspark.sql.types import StructType
 
     from etl_finance_spark.operators.core import upsert_new_rows
 
-    try:
-        target = spark.read.parquet(path)
-    except AnalysisException as e:
-        # Same contract as streaming's foreach_batch_upsert: only a
-        # missing target means "first write"; any other failure must
-        # re-raise or redelivered rows would append un-deduplicated.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        incoming.dropDuplicates(list(keys)).write.parquet(path)
+    keys = list(keys)
+    conf = spark._jsc.hadoopConfiguration()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(conf)
+    if not fs.exists(jpath):
+        incoming.dropDuplicates(keys).write.parquet(path)
         return
+    data = [st for st in fs.listStatus(jpath)
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))]
+    if not data:
+        raise ValueError(f"upsert target {path!r} exists but holds no data files")
+    parquet = spark._jvm.org.apache.parquet.hadoop
+    reader = parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromStatus(data[0], conf))
+    try:
+        footer = reader.getFooter().getFileMetaData().getSchema()
+    finally:
+        reader.close()
+    present = {footer.getFieldName(i) for i in range(footer.getFieldCount())}
+    missing = [k for k in keys if k not in present]
+    if missing:
+        raise ValueError(f"upsert target {path!r} lacks key columns {missing}")
+    key_schema = StructType([incoming.schema[k] for k in keys])
+    target = spark.read.schema(key_schema).parquet(path)
     upsert_new_rows(incoming, target, keys).write.mode("append").parquet(path)
 
 

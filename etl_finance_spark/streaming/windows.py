@@ -121,30 +121,18 @@ def read_event_stream(spark: SparkSession, path: str, schema,
 
 def foreach_batch_upsert(target_path: str, keys: list[str]):
     """X-STR-6: sink factory — returns a foreachBatch function applying
-    the R-SNK-2 anti-join upsert per micro-batch, making redelivered
-    batches idempotent (insert-if-absent on the key,
-    /root/reference/etl.py:182-191 generalized)."""
+    the R-SNK-2 anti-join upsert (sources.sinks.write_upsert) per
+    micro-batch, making redelivered batches idempotent (insert-if-absent
+    on the key, /root/reference/etl.py:182-191 generalized). Only a
+    missing target means "first batch"; a corrupt target raises rather
+    than append redelivered rows without the anti-join."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
+        # not at module level: importing sinks registers its declared
+        # query, which would move it ahead of this module's in collect()
+        from etl_finance_spark.sources.sinks import write_upsert
 
-        from etl_finance_spark.operators.core import upsert_new_rows
-
-        spark = batch_df.sparkSession
-        try:
-            target = spark.read.parquet(target_path)
-        except AnalysisException as e:
-            # Only a genuinely missing target means "first batch". Any
-            # other failure (transient FS error, corrupt files) must
-            # re-raise — appending without the anti-join would silently
-            # duplicate redelivered rows and break the idempotency
-            # contract this sink exists for (round-1 ADVICE).
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            fresh = batch_df.dropDuplicates(keys)
-        else:
-            fresh = upsert_new_rows(batch_df, target, keys)
-        fresh.write.mode("append").parquet(target_path)
+        write_upsert(batch_df.sparkSession, batch_df, target_path, keys)
 
     return sink
 

@@ -131,3 +131,64 @@ def test_forex_pipeline_semantics(spark, tmp_target):
     # idempotent reload
     run_forex_pipeline(spark, rates, btc, tmp_target)
     assert spark.read.parquet(tmp_target).count() == 4
+
+
+def _load_jobs(spark, group, load) -> int:
+    """Spark jobs one load runs, counted by its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_steady_state_loads_pin_job_counts(spark, tmp_path):
+    """A steady-state load (the target exists) runs only the jobs its
+    result needs: no schema-inference job on the target, no
+    re-deduplication of the target's keys, and no global mean
+    aggregate in forex. Increments are staged as parquet, like a
+    landing zone; the second increment re-delivers half of the first."""
+    d = dt.date
+    bars, news, rates, btc = {}, {}, {}, {}
+    for i in (0, 1):
+        days = range(1 + 5 * i, 11 + 5 * i)
+        bars[i] = _bars(spark, [(day, 10.0 + day, 12.0, 9.0,
+                                 None if day == 3 else 11.0 + day, 100 * day)
+                                for day in days])
+        news[i] = spark.createDataFrame(
+            [(f"2017-01-{day:02d}T10:00:00+0000", f"snippet {day}",
+              f"Headline {day}", "Business", None, ["K"]) for day in days],
+            NEWS_RAW_SCHEMA)
+        rates[i] = spark.createDataFrame(
+            [(d(2018, 1, day), 0.8 + day / 100, None if day == 4 else 0.7,
+              8.0, 6.0) for day in days], RATES_RAW_SCHEMA)
+        btc[i] = spark.createDataFrame(
+            [(d(2018, 1, day + 1), 14000.0 + day) for day in days],
+            BTC_RAW_SCHEMA)
+
+    def staged(df, name):
+        path = str(tmp_path / "landing" / name)
+        df.write.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
+
+    def stock_load(i):
+        frames = [("MSFT", staged(bars[i], f"bars_{i}"))]
+        return lambda: run_stock_pipeline(spark, frames, str(tmp_path / "stocks"))
+
+    def news_load(i):
+        raw = staged(news[i], f"news_{i}")
+        return lambda: run_news_pipeline(spark, raw, str(tmp_path / "news"))
+
+    def forex_load(i):
+        r, b = staged(rates[i], f"rates_{i}"), staged(btc[i], f"btc_{i}")
+        return lambda: run_forex_pipeline(spark, r, b, str(tmp_path / "forex"))
+
+    for domain, load, ceiling, keys in (("stocks", stock_load, 5, 15),
+                                        ("news", news_load, 3, 15),
+                                        ("forex", forex_load, 6, 16)):
+        load(0)()  # creates the target
+        jobs = _load_jobs(spark, f"steady-{domain}", load(1))
+        assert jobs <= ceiling, f"{domain}: {jobs} jobs per steady-state load"
+        assert spark.read.parquet(str(tmp_path / domain)).count() == keys

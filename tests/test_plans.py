@@ -648,3 +648,37 @@ def test_lineage_cuts_route_through_the_seam():
     assert not offenders, (
         "raw localCheckpoint outside lineage.py: " + ", ".join(offenders)
     )
+
+
+def test_etl_loads_skip_mean_broadcast_and_target_dedup(spark, tmp_path):
+    """The keyed-upsert loads keep their lean shape. Forex fills nulls
+    with each currency's mean inside its per-currency window, so the
+    plan has no global mean aggregate (a SinglePartition exchange) and
+    no broadcast join of its result. The upsert's anti-join reads the
+    target's keys as they are: its only aggregates are the incoming
+    side's dedup, none over the target scan."""
+    import datetime as dt
+
+    from etl_finance_spark.operators.core import dedup_by_key, upsert_new_rows
+    from etl_finance_spark.plans.forex import (
+        BTC_RAW_SCHEMA, RATES_RAW_SCHEMA, align_sources, clean_forex,
+        transform_forex,
+    )
+
+    rates = spark.createDataFrame(
+        [(dt.date(2018, 1, 1), 0.8, None, 8.0, 6.0)], RATES_RAW_SCHEMA)
+    btc = spark.createDataFrame([(dt.date(2018, 1, 2), 14000.0)], BTC_RAW_SCHEMA)
+    plan = explain_simple(
+        spark, transform_forex(clean_forex(align_sources(rates, btc))))
+    assert "BroadcastExchange" not in plan, plan
+    assert "SinglePartition" not in plan, plan
+
+    target, landing = str(tmp_path / "target"), str(tmp_path / "landing")
+    spark.createDataFrame([(1, "a")], ["k", "v"]).write.parquet(target)
+    spark.createDataFrame([(1, "b"), (2, "c")], ["k", "v"]).write.parquet(landing)
+    incoming = spark.read.schema("k long, v string").parquet(landing)
+    keys = spark.read.schema("k long").parquet(target)
+    plan = explain_simple(spark, upsert_new_rows(incoming, keys, ["k"]))
+    dedup = explain_simple(spark, dedup_by_key(incoming, ["k"]))
+    # Hash-, ObjectHash- and SortAggregate alike
+    assert plan.count("Aggregate(") == dedup.count("Aggregate("), plan

@@ -122,8 +122,9 @@ def test_write_upsert_parquet(spark):
     try:
         a = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
         write_upsert(spark, a, tmp, ["k"])
-        b = spark.createDataFrame([(2, "y2"), (3, "z")], ["k", "v"])
+        b = spark.createDataFrame([(2, "y2"), (3, "z"), (3, "z")], ["k", "v"])
         write_upsert(spark, b, tmp, ["k"])
+        write_upsert(spark, b, tmp, ["k"])  # redelivery appends no rows
         back = sorted((r.k, r.v) for r in spark.read.parquet(tmp).collect())
         assert back == [(1, "x"), (2, "y"), (3, "z")]  # 2 kept original
     finally:
@@ -323,6 +324,10 @@ def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
+def _parquet_files(path) -> set[str]:
+    return {p.name for p in path.iterdir() if p.suffix == ".parquet"}
+
+
 def test_write_upsert_reraises_non_missing_errors(spark, tmp_path):
     import pytest
 
@@ -332,6 +337,30 @@ def test_write_upsert_reraises_non_missing_errors(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], ["k", "v"])
     with pytest.raises(Exception):
         write_upsert(spark, df, str(bad), ["k"])
+    assert _parquet_files(bad) == {"part-0.parquet"}  # nothing appended
+
+
+def test_write_upsert_raises_on_target_lacking_key_column(spark, tmp_path):
+    """The target's key columns are read with an explicit schema, which
+    returns NULL for a column the files lack — the anti-join would then
+    append every row again. The footer check must raise instead."""
+    target = tmp_path / "t"
+    spark.createDataFrame([(1, "a")], ["other", "v"]).write.parquet(str(target))
+    before = _parquet_files(target)
+    df = spark.createDataFrame([(1, "a")], ["k", "v"])
+    with pytest.raises(ValueError, match="lacks key columns"):
+        write_upsert(spark, df, str(target), ["k"])
+    assert _parquet_files(target) == before
+
+
+def test_write_upsert_raises_on_directory_without_data_files(spark, tmp_path):
+    target = tmp_path / "t"
+    target.mkdir()
+    (target / "_SUCCESS").write_text("")
+    df = spark.createDataFrame([(1, "a")], ["k", "v"])
+    with pytest.raises(ValueError, match="no data files"):
+        write_upsert(spark, df, str(target), ["k"])
+    assert _parquet_files(target) == set()
 
 
 def test_orc_and_text_roundtrip(spark, tmp_path):

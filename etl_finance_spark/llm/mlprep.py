@@ -45,7 +45,7 @@ def q_embed_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines scale by identical constants; z rounds 6dp with the +0.0
     IEEE -0.0 guard (near-zero z is the common case by construction).
     At scale the stats frame persists and the re-assembled array form
-    (array_sort + transform, as in ivf_centroids) feeds the ANN rungs
+    (array_sort + transform over (pos, z) structs) feeds the ANN rungs
     directly."""
     emb = table(spark, sf_dir, "embeddings")
     flat = emb.select(

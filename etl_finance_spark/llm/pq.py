@@ -26,12 +26,12 @@ and directly comparable against the exact rung
 
 Spark shapes, same discipline as ivf_centroids (similarity.py):
 
-- **Training** is LLOYD passes over a deterministic TRAIN_CAP-bounded
-  sample packed into ONE row (similarity._packed_sample): all M
-  codebooks re-estimate in the same row-local fold — the build's only
-  shuffles are the sample TakeOrdered and the 1-row pack (r15; the
-  former per-pass (j, code, pos) rollups were ~8 micro-stages of
-  scheduling constants on a 4096-row frame).
+- **Training** is PQ_LLOYD numpy Lloyd passes per subspace
+  (similarity.lloyd) in ONE Python task over the deterministic
+  PQ_TRAIN_CAP-bounded sample (similarity.train_sample) — k-means is
+  the step SQL cannot say, and its input is bounded by construction.
+  The build's only shuffles are the sample TakeOrdered and the 1-row
+  pack.
 - **The model is one packed row** (M*KS*DSUB = 1024 doubles, a few KB)
   that broadcasts; encoding is a PURE PROJECTION (crossJoin +
   higher-order argmin per subspace), zero shuffles at any corpus size.
@@ -48,13 +48,18 @@ same-round driver-window slot per the declare-with-evidence rule.
 
 from __future__ import annotations
 
+from functools import partial
+
+import pandas as pd
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_finance_spark.hofbarrier import barrier
 from etl_finance_spark.lineage import cut_lineage, managed_persist
-from etl_finance_spark.llm.similarity import DIM, _packed_sample
+from etl_finance_spark.llm.similarity import (
+    DIM, _unpack, lloyd, train_sample,
+)
 from etl_finance_spark.registry import register
 
 M = 16            # subspaces
@@ -80,26 +85,19 @@ def with_normalized(df: DataFrame) -> DataFrame:
     )
 
 
-def _sub(vec: Column, j: Column | int) -> Column:
-    """The j-th DSUB-wide contiguous slice of ``vec`` (0-based j).
-    F.slice's start is 1-based and accepts a Column."""
-    j = F.lit(j) if isinstance(j, int) else j
-    return F.slice(vec, j * DSUB + 1, DSUB)
-
-
 def _sub_l2sq(w: Column, vec: Column, j: Column) -> Column:
     """L2^2 between codeword ``w`` and ``vec``'s j-th DSUB slice as a
     FLAT expression: sum_k (w[k] - vec[j*DSUB+k])^2 with no slice, no
-    zip_with array, no fold lambda. Bit-identical to
-    ``_l2sq(w, _sub(vec, j))``: the squared terms accumulate
-    left-to-right in position order, and IEEE ``0.0 + d == d`` for the
-    non-negative squares, so dropping the fold's 0.0 seed changes
-    nothing. DSUB is a small constant (4), so the expression stays far
+    zip_with array, no fold lambda. Bit-identical to the fold
+    similarity._l2sq over the slice, and to the training distance in
+    similarity.lloyd: the squared terms accumulate left-to-right in
+    position order, and IEEE ``0.0 + d == d`` for the non-negative
+    squares, so dropping the fold's 0.0 seed changes nothing. DSUB is a small constant (4), so the expression stays far
     from the JIT huge-method trap the 64-term unrolled dot hit (r14
     change 8 — that stays reverted); here the win is removing two
     array allocations + lambda dispatch per (vector, codeword) from
-    the hottest interpreted loop in the PQ family (training
-    assignment, corpus encode, ADC table build)."""
+    the hottest interpreted loop in the PQ family (corpus encode, ADC
+    table build)."""
     base = j * DSUB
     d0 = F.get(w, 0) - F.get(vec, base)
     acc = d0 * d0
@@ -109,161 +107,54 @@ def _sub_l2sq(w: Column, vec: Column, j: Column) -> Column:
     return acc
 
 
-def _pq_assign_packed(sample: Column, pqw_g: Column) -> Column:
-    """Per sample element, its per-subspace codes under a
-    ``_books_grouped`` codebook — array<struct<codes: array<int>,
-    vec>>. The per-subspace argmin is exactly the shared encode
-    expression (_codes_from_grouped: lexicographic (dist, code)
-    tie-break), mapped over the packed sample."""
-    return F.transform(
-        sample,
-        lambda x: F.struct(
-            _codes_from_grouped(x.getField("vec"), pqw_g).alias("codes"),
-            x.getField("vec").alias("vec"),
-        ),
-    )
+_PQW_SCHEMA = "pqw array<struct<j:int, code:int, w:array<double>>>"
 
 
-def _pq_means_packed(assigned: Column, pqw: Column) -> Column:
-    """One PQ re-estimation over the packed assignment: per (j, code)
-    codeword, the per-position mean of its members' j-th sub-vectors,
-    codewords that lost all members dropped — the row-local equivalent
-    of the former posexplode + groupBy(j, code, pos).avg + global
-    re-pack, with bit-identical arithmetic (per-slot left-to-right
-    sums in sample order / long count). Entry order is inherited from
-    ``pqw``, which is (j, code)-sorted from seeding and stays sorted
-    under member-loss filtering — the same order the former re-pack
-    re-established by sorting."""
-    with_n = F.transform(
-        pqw,
-        lambda e: F.aggregate(
-            F.filter(
-                assigned,
-                lambda a: F.element_at(
-                    a.getField("codes"), e.getField("j") + 1
-                ) == e.getField("code"),
-            ),
-            F.struct(
-                F.lit(0).cast("long").alias("n"),
-                F.transform(
-                    e.getField("w"), lambda _: F.lit(0.0)
-                ).alias("s"),
-            ),
-            lambda ac, a: F.struct(
-                (ac.getField("n") + 1).alias("n"),
-                F.zip_with(
-                    ac.getField("s"),
-                    _sub(a.getField("vec"), e.getField("j")),
-                    lambda s, v: s + v,
-                ).alias("s"),
-            ),
-            lambda ac: F.struct(
-                e.getField("j").alias("j"),
-                e.getField("code").alias("code"),
-                ac.getField("n").alias("n"),
-                F.transform(
-                    ac.getField("s"), lambda s: s / ac.getField("n")
-                ).alias("w"),
-            ),
-        ),
-    )
-    return F.transform(
-        F.filter(with_n, lambda e: e.getField("n") > 0),
-        lambda e: F.struct(
-            e.getField("j").alias("j"),
-            e.getField("code").alias("code"),
-            e.getField("w").alias("w"),
-        ),
-    )
+def _pq_train(batches, m: int, dsub: int, ks: int, iters: int):
+    """mapInPandas body over train_sample's single row: subspace j's
+    codebook is ``lloyd`` over the sample's j-th DSUB slices, seeded
+    with the same slice of the KS lowest-vec_id vectors. Constants are
+    bound on the driver (functools.partial), as in
+    similarity._ivf_train."""
+    for pdf in batches:
+        for sample in pdf["sample"]:
+            X, seeds = _unpack(sample, ks)
+            pqw = []
+            for j in range(m):
+                sub = slice(j * dsub, (j + 1) * dsub)
+                codes, W = lloyd(X[:, sub], seeds[:, sub], iters)
+                pqw += [{"j": j, "code": int(c), "w": w}
+                        for c, w in zip(codes, W)]
+            yield pd.DataFrame({"pqw": [pqw]})
 
 
 def pq_train(vectors: DataFrame, train_cap: int = PQ_TRAIN_CAP) -> DataFrame:
     """Train the M per-subspace codebooks; returns the packed 1-row
-    model (column ``pqw``). ``vectors`` needs (vec_id, vec) with vec
+    model (column ``pqw``, entries in (j, code) order; codewords that
+    lost all members drop out). ``vectors`` needs (vec_id, vec) with vec
     already double[] (with_unit_vec upstream).
 
     Deterministic end to end: the hash-ordered training sample, the
-    lowest-vec_id seeding, the lexicographic (dist, code) argmin
-    tie-break, and the (j, code) sort of the packed model are all
+    lowest-vec_id seeding and the lowest-code argmin tie-break are all
     partition-invariant — the same corpus yields the same model on any
-    cluster layout (pinned in tests/test_pq.py).
-
-    PACKED-SAMPLE TRAINING (r15): same restructure as ivf_centroids —
-    the sample is bounded by construction, so the whole Lloyd
-    iteration runs as higher-order folds over ONE packed sample row
-    (similarity._packed_sample) instead of ~8 micro-stages of
-    crossJoin + (j, code, pos) exchanges + global re-packs on a
-    4096-row frame, each paying fixed scheduling constants (the r15
-    phase probe: the cut's toRdd under AQE executes those stages; the
-    cost was stage count, not Catalyst compile). Assignment reuses the
-    shared encode expression (_codes_col); means accumulate per
-    (j, code, pos) slot left-to-right in sample order and divide by
-    the long count — bit-identical arithmetic to the former partial
-    Average. Bit-identity old-vs-new verified on sf0.001/0.01/0.1
-    before the old shape was removed (OPTIMIZATION_r15.md). The final
-    non-eager cut is unchanged: consumers never replay k-means
-    lineage, and constructing a consumer must not train as a side
-    effect (the first real action does)."""
-    df = _packed_sample(vectors, train_cap)
-    # seeds: the KS lowest-vec_id sample vectors donate their j-th
-    # slice to subspace j's codebook (the ivf seeding trick, per
-    # subspace). Fewer than KS sample rows -> NULL slices, filtered out
-    # (degenerate/empty inputs keep a schema-stable empty codebook).
-    # The sorted-KS prefix materializes as its own barriered column:
-    # inlined, the seed lambda's F.get would re-sort the sample once
-    # per (j, code) pair.
-    df = barrier(df.select(
-        "sample",
-        F.slice(F.array_sort(F.col("sample")), 1, KS).alias("s"),
-    ))
-    seeds = F.filter(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(M - 1)),
-                lambda j: F.transform(
-                    F.sequence(F.lit(0), F.lit(KS - 1)),
-                    lambda c: F.struct(
-                        j.alias("j"),
-                        c.alias("code"),
-                        _sub(F.get(F.col("s"), c).getField("vec"),
-                             j).alias("w"),
-                    ),
-                ),
-            )
-        ),
-        lambda x: x.getField("w").isNotNull(),
+    cluster layout (pinned in tests/test_pq.py). The non-eager cut is
+    ivf_centroids': consumers never replay training, and constructing a
+    consumer does not train (the first real action does)."""
+    model = train_sample(vectors, train_cap).mapInPandas(
+        partial(_pq_train, m=M, dsub=DSUB, ks=KS, iters=PQ_LLOYD),
+        _PQW_SCHEMA,
     )
-    df = barrier(df.select("sample", seeds.alias("pqw")))
-    for _ in range(PQ_LLOYD):
-        # three barriers per pass, as in ivf_centroids plus the grouped
-        # codebook: the by-subspace regroup runs once per pass (not
-        # once per sample element), the assignment column is referenced
-        # once per codeword by the member filters, and the model column
-        # once per sample element by the encode lambda
-        df = barrier(df.select(
-            "sample", "pqw",
-            _books_grouped(F.col("pqw")).alias("g"),
-        ))
-        df = barrier(df.select(
-            "sample", "pqw",
-            _pq_assign_packed(F.col("sample"), F.col("g")).alias("a"),
-        ))
-        df = barrier(df.select(
-            "sample",
-            _pq_means_packed(F.col("a"), F.col("pqw")).alias("pqw"),
-        ))
-    return cut_lineage(df.select("pqw"), eager=False)
+    return cut_lineage(model, eager=False)
 
 
 def _books_grouped(pqw: Column) -> Column:
     """``pqw`` regrouped by subspace: array (index j) of that
     subspace's struct(j, code, w) entries, (j, code) order preserved.
-    Computed ONCE — on the 1-row model frame before a broadcast, or as
-    a barriered column per training pass — so the per-vector encode
-    below replaces its former per-(vector, j) filter scan of all M*KS
-    entries with one element_at (r15: that scan was the hot loop of
-    both training assignment and corpus encode — M*KS lambda evals per
-    vector per subspace, ~16x the arithmetic the argmin itself needs)."""
+    Computed ONCE, on the 1-row model frame before a broadcast, so the
+    per-vector encode below replaces a per-(vector, j) filter scan of
+    all M*KS entries with one element_at (that scan was the hot loop of
+    corpus encode — M*KS lambda evals per vector per subspace, ~16x the
+    arithmetic the argmin itself needs)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(M - 1)),
         lambda j: F.filter(pqw, lambda x: x.getField("j") == j),
@@ -273,9 +164,7 @@ def _books_grouped(pqw: Column) -> Column:
 def _codes_from_grouped(vec: Column, pqw_g: Column) -> Column:
     """array<int> of per-subspace nearest-codeword codes for ``vec``
     against a ``_books_grouped`` codebook column (lexicographic
-    (dist, code) argmin — the deterministic tie-break; same subsets in
-    the same order as the former flat-filter shape, so codes are
-    bit-identical)."""
+    (dist, code) argmin — the deterministic tie-break training uses)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(M - 1)),
         lambda j: F.array_min(

@@ -17,13 +17,16 @@ across engines; double products of exactly-converted floats agree).
 from __future__ import annotations
 
 import hashlib
+from functools import partial
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
-from etl_finance_spark.hofbarrier import barrier
 from etl_finance_spark.lineage import (
     cut_lineage, ensure_persisted, managed_persist,
 )
@@ -375,187 +378,102 @@ def _cell_scores(cents: Column, vec: Column) -> Column:
     )
 
 
-def _packed_sample(vectors: DataFrame, train_cap: int) -> DataFrame:
-    """The ``train_cap``-bounded deterministic training sample packed
-    into ONE row (column ``sample``: array<struct<vec_id, vec>>), in
-    the same hash order the row-based Lloyd builders consumed
-    (xxhash64(vec_id) ascending, vec_id tiebreak).
+def train_sample(vectors: DataFrame, cap: int) -> DataFrame:
+    """The ``cap``-bounded deterministic training sample (xxhash64(vec_id)
+    order, vec_id tiebreak — the trade FAISS makes when training a
+    quantizer: index build cost stays constant as the corpus grows)
+    packed into ONE row: ``sample`` = array<struct<h, vec_id, vec>>.
 
-    The order is re-established ROW-LOCALLY with an explicit
-    array_sort rather than inherited from the TakeOrdered operator's
-    single output partition, so the packed sample — and therefore
-    every left-to-right float fold the builders run over it — is
-    partition-layout-proof by construction, not by operator accident.
-    Shared by ivf_centroids and pq.pq_train (r15: training collapsed
-    from ~14 micro-stages of 4096-row shuffles to one TakeOrdered +
-    one global pack; see ivf_centroids)."""
-    raw = (
-        vectors.select("vec_id", "vec")
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(train_cap)
+    The global aggregate is load-bearing: it yields exactly one row,
+    even on empty input, so a trainer mapped over it runs exactly once
+    whatever the partition layout or checkpoint mode."""
+    return (
+        vectors.select(F.xxhash64("vec_id").alias("h"), "vec_id", "vec")
+        .orderBy("h", "vec_id")
+        .limit(cap)
         .groupBy()
-        .agg(F.collect_list(F.struct("vec_id", "vec")).alias("raw"))
-    )
-    sample = F.transform(
-        F.array_sort(
-            F.transform(
-                "raw",
-                lambda x: F.struct(
-                    F.xxhash64(x.getField("vec_id")).alias("h"),
-                    x.getField("vec_id").alias("vec_id"),
-                    x.getField("vec").alias("vec"),
-                ),
-            )
-        ),
-        lambda s: F.struct(
-            s.getField("vec_id").alias("vec_id"),
-            s.getField("vec").alias("vec"),
-        ),
-    )
-    # barrier: the sorted pack must materialize once per (single) row —
-    # inlined, each downstream consumer expression would re-sort it
-    return barrier(raw.select(sample.alias("sample")))
-
-
-def _lloyd_assign_packed(sample: Column, cents: Column) -> Column:
-    """Per sample element, its nearest cell under ``cents`` —
-    array<struct<cell, vec>>. The argmin is the exact expression the
-    row-based builder used (_cell_scores + array_min: lexicographic
-    (d2, cell) tie-break), mapped over the packed sample."""
-    return F.transform(
-        sample,
-        lambda x: F.struct(
-            F.array_min(
-                _cell_scores(cents, x.getField("vec"))
-            ).getField("cell").alias("cell"),
-            x.getField("vec").alias("vec"),
-        ),
+        .agg(F.collect_list(F.struct("h", "vec_id", "vec")).alias("sample"))
     )
 
 
-def _lloyd_means_packed(assigned: Column, cents: Column) -> Column:
-    """One Lloyd re-estimation over the packed assignment: per model
-    cell, the per-dimension mean of its members, empty cells dropped —
-    the row-local equivalent of the former posexplode +
-    groupBy(cell, pos).avg + re-pack, with bit-identical arithmetic:
-    each (cell, pos) slot accumulates 0.0 + v1 + ... + vn in sample
-    order (exactly the order the single-map-task partial Average saw)
-    and divides by the long count once at the end."""
-    with_n = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.filter(
-                assigned,
-                lambda a: a.getField("cell") == c.getField("cell"),
-            ),
-            F.struct(
-                F.lit(0).cast("long").alias("n"),
-                F.transform(
-                    c.getField("cvec"), lambda _: F.lit(0.0)
-                ).alias("s"),
-            ),
-            lambda ac, a: F.struct(
-                (ac.getField("n") + 1).alias("n"),
-                F.zip_with(
-                    ac.getField("s"), a.getField("vec"),
-                    lambda s, v: s + v,
-                ).alias("s"),
-            ),
-            lambda ac: F.struct(
-                c.getField("cell").alias("cell"),
-                ac.getField("n").alias("n"),
-                F.transform(
-                    ac.getField("s"), lambda s: s / ac.getField("n")
-                ).alias("cvec"),
-            ),
-        ),
-    )
-    return F.transform(
-        F.filter(with_n, lambda e: e.getField("n") > 0),
-        lambda e: F.struct(
-            e.getField("cell").alias("cell"),
-            e.getField("cvec").alias("cvec"),
-        ),
-    )
+def _unpack(sample, n_seeds: int) -> tuple[np.ndarray, np.ndarray]:
+    """(X, seeds) of one packed sample: X's rows in (h, vec_id) order,
+    re-established here so the float sums never depend on the order
+    collect_list met the rows; seeds = the ``n_seeds`` lowest-vec_id
+    rows (no rand(): retries and re-plans reproduce the same model)."""
+    h = np.array([e["h"] for e in sample], dtype=np.int64)
+    ids = np.array([e["vec_id"] for e in sample], dtype=np.int64)
+    order = np.lexsort((ids, h))
+    X = (np.vstack([sample[i]["vec"] for i in order]) if len(order)
+         else np.empty((0, 0)))
+    return X, X[np.argsort(ids[order], kind="stable")[:n_seeds]]
+
+
+def lloyd(X: np.ndarray, C: np.ndarray,
+          iters: int) -> tuple[np.ndarray, np.ndarray]:
+    """``iters`` Lloyd passes over the rows of X from the seed rows C;
+    returns (ids, C): the seed indices of the surviving cells and their
+    centroids, empty cells dropped. The arithmetic order is fixed so the
+    model is reproducible bit for bit and agrees with the SQL routing
+    expression (_l2sq): d2 adds (x - c)^2 dimension by dimension from
+    0.0 (np.sum / einsum / matmul would reassociate the sum), argmin
+    takes the lowest cell on ties, and a mean adds its members in
+    sample order before dividing by their count."""
+    ids = np.arange(len(C))
+    for _ in range(iters if len(C) else 0):
+        d2 = np.zeros((len(X), len(C)))
+        for j in range(X.shape[1]):
+            diff = X[:, j, None] - C[None, :, j]
+            d2 += diff * diff
+        cell = d2.argmin(axis=1)
+        n = np.bincount(cell, minlength=len(C))
+        s = np.zeros_like(C)
+        np.add.at(s, cell, X)
+        keep = n > 0
+        ids, C = ids[keep], s[keep] / n[keep, None]
+    return ids, C
+
+
+_CENTS_SCHEMA = "cents array<struct<cell:int, cvec:array<double>>>"
+
+
+def _ivf_train(batches, n_cells: int, iters: int):
+    """mapInPandas body over train_sample's single row. Module-level
+    with its constants bound on the driver (functools.partial): workers
+    import a fresh module, so a monkeypatched global would not reach
+    them."""
+    for pdf in batches:
+        for sample in pdf["sample"]:
+            X, seeds = _unpack(sample, n_cells)
+            cells, C = lloyd(X, seeds, iters)
+            yield pd.DataFrame({"cents": [[
+                {"cell": int(c) + 1, "cvec": v} for c, v in zip(cells, C)
+            ]]})
 
 
 def ivf_centroids(vectors: DataFrame,
                   train_cap: int = TRAIN_CAP) -> DataFrame:
-    """Deterministic k-means coarse quantizer, all DataFrame ops,
-    returning the model PACKED into ONE row:
-    cents = array<struct<cell:int, cvec:array<double>>>.
+    """Deterministic k-means coarse quantizer, returning the model
+    PACKED into ONE row: cents = array<struct<cell:int,
+    cvec:array<double>>>, cells 1..N_CELLS (those that kept members).
 
-    Seeds = the N_CELLS lowest-vec_id vectors of the training set (no
-    rand() — retries and re-plans reproduce the same model), then
-    LLOYD_ITERS assign/average passes. Packing is the scale move
-    (round-4): with the model as a single array row, nearest-cell
-    assignment is an array_min over a row-local expression — the corpus
-    NEVER shuffles, neither in the Lloyd passes here nor in downstream
-    routing (the round-3 shape ran every assignment through a
-    corpus-cardinality groupBy(vec_id) exchange). Since r15 the Lloyd
-    passes themselves are row-local too (below): the only shuffles left
-    in the whole build are the sample TakeOrdered and the 1-row pack.
+    Training is bounded: LLOYD_ITERS numpy Lloyd passes (``lloyd``) in
+    one Python task over the ``train_cap``-row sample (train_sample),
+    seeded with its N_CELLS lowest-vec_id vectors. When the corpus fits
+    under the cap — every test fixture does — the sample IS the corpus.
+    Inference stays SQL: with the model as a single array row,
+    nearest-cell routing (ivf_assign) is an array_min over a row-local
+    expression, so the corpus never shuffles.
 
-    SAMPLE-BOUNDED TRAINING (round-4): the Lloyd passes run on a
-    deterministic hash-ordered sample of at most ``train_cap`` vectors
-    (xxhash64 order, vec_id tiebreak), not the full corpus — the same
-    trade FAISS makes when training a coarse quantizer. Without the
-    bound, every Lloyd pass re-reads the entire corpus, so at 100 TB the
-    *index build* costs LLOYD_ITERS extra full scans. When the corpus
-    fits under the cap — every test fixture does — the sample IS the
-    corpus, so the model is bit-for-bit the round-3 model and the
-    measured recall constants are unchanged.
-
-    PACKED-SAMPLE TRAINING (r15, guide §1.2/§2.4): the r09 profile
-    blamed the build on "driver-side compile", but the r15 phase probe
-    showed the cut's toRdd under AQE *executes* the intermediate query
-    stages — the real cost was ~14 micro-stages (per-pass broadcast
-    builds, (cell, pos) exchanges, global re-pack exchanges) each
-    paying fixed scheduling constants on a 4096-row frame. The sample
-    is BOUNDED by construction, so the whole Lloyd iteration is now
-    row-local: one TakeOrdered + one global pack produce a 1-row
-    ``sample`` array ordered exactly as the row-based builder's single
-    map task streamed it, and every pass runs as higher-order folds
-    over that row (assignment = the same _cell_scores argmin; means =
-    per-(cell, pos) left-to-right sums in sample order / long count —
-    bit-identical arithmetic to the former partial Average). Plan:
-    2 shuffles total at any corpus size, zero per-pass stages. The
-    barriers between passes are load-bearing twice over: they stop
-    CollapseProject from inlining the previous model into the
-    per-element assignment lambda (the hofbarrier re-evaluation
-    hazard: once per sample element per pass) and they keep the plan
-    depth linear in LLOYD_ITERS. Bit-identity old-vs-new was verified
-    empirically on sf0.001/0.01/0.1 and the scale fixtures before the
-    old shape was removed (OPTIMIZATION_r15.md)."""
-    # Final cut only (non-eager): consumers must never replay k-means
-    # lineage, and constructing a consumer DataFrame must not train the
-    # model as a side effect — the first real action does. The cut's
-    # persist drains via lineage.release_cuts() (lineage.py contract).
-    df = _packed_sample(vectors, train_cap)
-    # seeds: the N_CELLS lowest-vec_id sample vectors, cell = rank+1 —
-    # array_sort on (vec_id, vec) structs == the former
-    # sort_array(collect_list(...)) of the limit(N_CELLS) frame
-    seeds = F.transform(
-        F.slice(F.array_sort(F.col("sample")), 1, N_CELLS),
-        lambda x, i: F.struct(
-            (i + 1).alias("cell"), x.getField("vec").alias("cvec")
-        ),
+    The cut is non-eager: consumers never replay the training lineage,
+    and constructing a consumer must not train the model as a side
+    effect — the first real action does. The cut's persist drains via
+    lineage.release_cuts() (lineage.py contract)."""
+    model = train_sample(vectors, train_cap).mapInPandas(
+        partial(_ivf_train, n_cells=N_CELLS, iters=LLOYD_ITERS),
+        _CENTS_SCHEMA,
     )
-    df = barrier(df.select("sample", seeds.alias("cents")))
-    for _ in range(LLOYD_ITERS):
-        # two barriers per pass: materialize the assignment once (the
-        # per-cell member filters reference it N_CELLS x), then the new
-        # model once (the next pass's per-element argmin lambda
-        # references it once per sample element)
-        df = barrier(df.select(
-            "sample", "cents",
-            _lloyd_assign_packed(F.col("sample"), F.col("cents")).alias("a"),
-        ))
-        df = barrier(df.select(
-            "sample",
-            _lloyd_means_packed(F.col("a"), F.col("cents")).alias("cents"),
-        ))
-    return cut_lineage(df.select("cents"), eager=False)
+    return cut_lineage(model, eager=False)
 
 
 def ivf_assign(vectors: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
@@ -587,9 +505,7 @@ def ivf_assign(vectors: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
 
 def ivf_corpus_cells(vectors: DataFrame, cent: DataFrame) -> DataFrame:
     """Corpus routing in the candidate-join convention: ``(cid, cell)``,
-    one row per corpus vector (nprobe=1). Shared by ann_ivf_topk and the
-    stage profiler (scripts/profile_ivf.py) so the profiled plan IS the
-    production plan, not a hand-rolled copy that can drift (ADVICE r09)."""
+    one row per corpus vector (nprobe=1), as ann_ivf_topk routes it."""
     return ivf_assign(vectors, cent, 1).select(
         F.col("vec_id").alias("cid"), "cell"
     )
@@ -598,8 +514,8 @@ def ivf_corpus_cells(vectors: DataFrame, cent: DataFrame) -> DataFrame:
 def ivf_query_cells(vectors: DataFrame, cent: DataFrame,
                     nprobe: int | None = None) -> DataFrame:
     """Query routing in the candidate-join convention: ``(qid, cell)``,
-    nprobe rows per query. Shared by ann_ivf_topk, pq.ivfpq_topk, and
-    the stage profiler. N_PROBE is read at call time (late-bound, the
+    nprobe rows per query. Shared by ann_ivf_topk and pq.ivfpq_topk.
+    N_PROBE is read at call time (late-bound, the
     PAIR_SALTS convention) so a monkeypatched module global still
     reaches callers that omit nprobe."""
     if nprobe is None:
@@ -654,8 +570,8 @@ def ann_ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
 
     ``cent``: a prebuilt (checkpointed) quantizer model to reuse — the
     index-amortization path; omitted, the model trains in-line."""
-    # The corpus feeds 2 + 2*LLOYD_ITERS consumers (seeding, every
-    # Lloyd assign, corpus routing, rerank); without a persist each one
+    # The corpus feeds three consumers (the training sample, corpus
+    # routing, rerank); without a persist each one
     # re-runs the scan + unit-vec projection (VERDICT.md round-2 item 7
     # — q_ann_ivf_topk was 2x the next-slowest query on recompute alone).
     # persist() (MEMORY_AND_DISK) rather than localCheckpoint: evictable,
@@ -823,8 +739,8 @@ def semantic_dedup(vectors: DataFrame, tau: float,
     (q_embed_neardup): a cross-cell near-duplicate pair is missed —
     that recall loss is measured, not hidden, in
     tests/test_llm.py::TestSemanticDedup."""
-    # the corpus feeds k-means seeding, the Lloyd passes, cell routing
-    # and both sides of the pair scan — persist once (same rationale as
+    # the corpus feeds the training sample, cell routing and both sides
+    # of the pair scan — persist once (same rationale as
     # ann_ivf_topk, VERDICT r2 #7: without it every consumer re-runs
     # the scan + unit-vec projection); managed, see ann_lsh_topk
     vectors = managed_persist(vectors)

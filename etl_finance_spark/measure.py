@@ -1,10 +1,9 @@
 """The repo's single timed-measurement idiom.
 
 Every harness that times a declared query — bench.py, scripts/
-ab_pair.py, scripts/profile_ivf.py, tests/test_scale_probe*.py — must
-measure the same thing, or cross-harness conclusions (a bench flag
-adjudicated by the paired A/B, a profile stage compared to the frozen
-detail) silently stop being about the same quantity. The protocol:
+ab_pair.py, tests/test_scale_probe*.py — must measure the same thing,
+or cross-harness conclusions (a bench flag adjudicated by the paired
+A/B) silently stop being about the same quantity. The protocol:
 
 - execute the FULL plan through the ``noop`` sink: unlike ``count()``
   (which lets Catalyst prune every projected column away), the noop
@@ -15,8 +14,8 @@ detail) silently stop being about the same quantity. The protocol:
 
 This module is that protocol's one home (r10 review finding: the idiom
 had grown three hand-written copies). A harness that needs different
-bookkeeping (bench.py's NaN-on-crash, the profiler's closure stages)
-wraps these primitives rather than re-writing the sink/drain steps.
+bookkeeping (bench.py's NaN-on-crash) wraps these primitives rather
+than re-writing the sink/drain steps.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 
@@ -42,3 +43,14 @@ def explain_simple(spark, df) -> str:
             "simple"
         )
     )
+
+
+def model_digest(entries, keys: tuple[str, ...], vec: str) -> str:
+    """sha256 over a packed model's exact text (keys, then every double
+    as float.hex()): a golden digest pins a trained model bit for bit."""
+    text = ";".join(
+        ",".join(str(e[k]) for k in keys) + ":"
+        + ",".join(float.hex(x) for x in e[vec])
+        for e in entries
+    )
+    return hashlib.sha256(text.encode()).hexdigest()

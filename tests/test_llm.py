@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, model_digest
 from etl_finance_spark.catalog import table
 from etl_finance_spark.llm.dedup import (
     JACCARD_TAU, exact_jaccard_pairs, hamming_distance, minhash_lsh_pairs,
@@ -232,6 +232,46 @@ def test_ivf_sample_bounded_training(spark):
     iset = {(r.qid, r.cid) for r in ivf}
     recall = len(iset & bset) / len(bset)
     assert recall >= 0.3, f"sample-trained recall {recall:.3f}"
+
+
+def test_lloyd_sums_squared_distance_dimension_by_dimension():
+    """lloyd's d2 must add (x - c)^2 left to right from 0.0, as the SQL
+    routing fold does. The fixtures hold no near-ties, so the golden
+    digests alone cannot see a reassociated sum; this input can. From
+    the origin, cell 0's squares are 2^54, 2^54 and fourteen 4s: in
+    order each 4 is half an ulp of 2^55 and rounds away (d2 = 2^55),
+    while np.sum / einsum / matmul add the 4s among themselves first
+    (2^55 + 56). Cell 1 sits at 2^55 + 16 either way, so only the
+    in-order sum keeps the point in cell 0."""
+    import numpy as np
+
+    from etl_finance_spark.llm.similarity import lloyd
+
+    big = 2.0 ** 27
+    seeds = np.array([[big, big] + [2.0] * 14,
+                      [big, big, 4.0] + [0.0] * 13])
+    ids, cents = lloyd(np.zeros((1, 16)), seeds, 1)
+    assert ids.tolist() == [0]
+    assert cents.tolist() == [[0.0] * 16]
+
+
+def test_ivf_model_golden_digest(spark):
+    """The trained quantizer is pinned bit for bit, at full cap and at a
+    cap below the corpus size (digests of the model the former SQL
+    folds trained; the summation order they imply is pinned on a
+    crafted input by the lloyd test above)."""
+    from etl_finance_spark.llm.similarity import ivf_centroids
+
+    emb = with_unit_vec(table(spark, SF_SMOKE, "embeddings"))
+    n = emb.count()
+    assert n == 500  # the digests below are for this fixture
+    for kwargs, want in (
+        ({}, "b385ca3010d4ea837bc6ae29799c3d39900df91be2aae133904a40904b9a8eea"),
+        ({"train_cap": max(64, n // 4)},
+         "c665250a21ec08d79502c33d5a76ebeaba3059fcdd77a3d32bbb316cf15f1114"),
+    ):
+        (row,) = ivf_centroids(emb, **kwargs).collect()
+        assert model_digest(row["cents"], ("cell",), "cvec") == want, kwargs
 
 
 def test_connected_components_known_graph(spark):

@@ -534,6 +534,32 @@ def test_signature_passes_are_zero_shuffle(spark):
     assert "Generate" in plan_of(simhash(docs))
 
 
+def test_model_training_is_one_python_task_over_packed_sample(
+        spark, monkeypatch):
+    """IVF and PQ training: exactly one mapInPandas, directly over the
+    global (no-grouping) aggregate that packs the bounded sample into
+    one row — so the numpy trainer runs once whatever the partition
+    layout — and no hash shuffle. The final lineage cut is bypassed so
+    the training plan itself is visible."""
+    from etl_finance_spark.catalog import table
+    from etl_finance_spark.llm import pq, similarity
+
+    emb = similarity.with_unit_vec(table(spark, SF_CORRECT, "embeddings"))
+    for mod in (similarity, pq):
+        monkeypatch.setattr(mod, "cut_lineage", lambda df, eager=True: df)
+    for name, model in (("ivf", similarity.ivf_centroids(emb)),
+                        ("pq", pq.pq_train(emb))):
+        maps = [n for n in _lp_walk(model._jdf.queryExecution().optimizedPlan())
+                if n.nodeName() == "MapInPandas"]
+        assert len(maps) == 1, name
+        (child,) = _lp_children(maps[0])
+        assert child.nodeName() == "Aggregate", (name, child.toString())
+        assert child.groupingExpressions().isEmpty(), (name, child.toString())
+        plan = explain_simple(spark, model)
+        assert plan.count("MapInPandas") == 1, f"{name}:\n{plan}"
+        assert "Exchange hashpartitioning" not in plan, f"{name}:\n{plan}"
+
+
 def test_shared_builds_are_memoized_and_cached(spark):
     """Round-4 amortization seams: the co-purchase edge build and the
     IVF quantizer model are session-memoized — consumers read one

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE, explain_simple
+from conftest import SF_SMOKE, explain_simple, model_digest
 
 from etl_finance_spark.catalog import table
 from etl_finance_spark.llm.pq import (
@@ -177,15 +177,11 @@ def test_ivfpq_index_plan_is_shuffle_free(spark):
     assert idx.columns == ["cid", "cell", "codes"]
 
 
-def test_ivfpq_invariant_to_salting_and_partitioning(spark):
-    """The PAIR_SALTS fan-out on the cell-keyed candidate join is a
-    pure parallelism move, and every ranking stage breaks ties on the
-    unique cid after 6dp rounding — so IVF-PQ results must be
-    row-identical with salting disabled AND under a different input
-    partition layout (the same invariance contract the LSH/IVF rungs
-    pin in test_llm.py)."""
-    import etl_finance_spark.llm.similarity as S
-
+def test_ivfpq_invariant_to_partitioning(spark):
+    """Every ranking stage breaks ties on the unique cid after 6dp
+    rounding, so IVF-PQ results must be row-identical under a different
+    input partition layout (the same invariance contract the LSH/IVF
+    rungs pin in test_llm.py)."""
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") < 30)
 
@@ -196,15 +192,17 @@ def test_ivfpq_invariant_to_salting_and_partitioning(spark):
 
     base = snap(emb)
     assert len(base) == 30 * TOP_K
-    # the candidate stage is shared (similarity.ivf_candidates), so one
-    # patch point covers both rungs — pq.py no longer salts on its own
-    old = S.PAIR_SALTS
-    S.PAIR_SALTS = 1
-    try:
-        assert snap(emb) == base
-    finally:
-        S.PAIR_SALTS = old
     assert snap(emb.repartition(7)) == base
+
+
+def test_pq_model_golden_digest(spark):
+    """The trained codebooks are pinned bit for bit (see
+    test_llm.py::test_ivf_model_golden_digest for the arithmetic order
+    this holds to)."""
+    (row,) = pq_train(_emb(spark)).collect()
+    assert model_digest(row["pqw"], ("j", "code"), "w") == (
+        "32bb56f938ae177f42db709faa768f8fb5cbffe99f8736e0dd6cf776ac566f68"
+    )
 
 
 def test_pq_empty_input_schema_stable(spark):

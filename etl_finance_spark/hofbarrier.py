@@ -10,8 +10,9 @@ per array element. Measured on the r14 profile (sf0.1, warm noop):
 word-5-gram shingling re-ran ``split(text)`` once per gram position —
 2.17s vs 0.59s with the split materialized; the 32-seed MinHash
 projection re-ran ``array_distinct(split(...))`` per seed — 0.51s vs
-0.26s. llm/dedup.simhash documented the same hazard in round 4 (63x on
-the per-bit fold) with an inline single-element explode.
+0.26s. llm/dedup.simhash's per-bit fold hit it first, in round 4: the
+token hashing re-ran once per bit (63x; 3.6s vs 1.1s at sf0.1 under the
+noop sink).
 
 ``barrier(df)`` is that idiom as a shared helper: a Generate node with
 row multiplier 1 that CollapseProject cannot cross, so columns computed

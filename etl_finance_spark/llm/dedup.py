@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
 from etl_finance_spark.hofbarrier import barrier
+from etl_finance_spark.lineage import managed_persist
 from etl_finance_spark.registry import register
 
 N_MINHASH = 32
@@ -88,18 +89,19 @@ def doc_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def exact_jaccard_pairs(docs: DataFrame, tau: float) -> DataFrame:
-    """X-LLM-2: all doc pairs with token-set Jaccard >= tau.
+def token_jaccard_pairs(toks: DataFrame, tau: float) -> DataFrame:
+    """All doc pairs with Jaccard >= tau over any ``(doc_id, tok)``
+    token-set relation (unigrams, shingles).
 
     Inverted-index join: pairs only form through a shared token, so the
     complexity is sum over tokens of df(t)^2 — fine for rare tokens,
-    quadratic for stopwords (which is why rung 3 exists). Sizes attach
-    to the post-aggregation pair set, NOT the index rows — the measured
-    r14 trade recorded at doc_tokens.
+    quadratic for stopwords (which is why rungs 3 and the prefix filter
+    exist). Sizes attach to the post-aggregation pair set, NOT the
+    index rows — the measured r14 trade recorded at doc_tokens.
     """
-    # three consumers (sizes + both join sides): tokenize once
-    toks = doc_tokens(docs).persist()
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    # three consumers (sizes + both join sides): tokenize once; managed
+    # so the harness's release_cuts() drains it post-consumption
+    toks = managed_persist(toks)
     a, b = toks.alias("a"), toks.alias("b")
     shared = (
         a.join(b, "tok")
@@ -109,6 +111,29 @@ def exact_jaccard_pairs(docs: DataFrame, tau: float) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("shared"))
     )
+    return _jaccard_filter(shared, toks, tau)
+
+
+def _candidate_shared(cands: DataFrame, toks: DataFrame) -> DataFrame:
+    """Shared-token count per candidate pair (d1, d2): the token
+    relation joins back onto the candidates only, so exact verification
+    is linear in candidates (semi-join pruned)."""
+    t1 = toks.select(F.col("doc_id").alias("d1"), "tok")
+    t2 = toks.select(F.col("doc_id").alias("d2"), "tok")
+    return (
+        cands.join(t1, "d1")
+        .join(t2, ["d2", "tok"])
+        .groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def _jaccard_filter(shared: DataFrame, toks: DataFrame,
+                    tau: float) -> DataFrame:
+    """THE exact-verification step every Jaccard rung ends in: per-doc
+    token-set sizes join onto the (d1, d2, shared) pairs, Jaccard is
+    rounded 6dp (the cross-engine rule) and thresholded at ``tau``."""
+    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
@@ -119,6 +144,11 @@ def exact_jaccard_pairs(docs: DataFrame, tau: float) -> DataFrame:
         .filter(F.col("jaccard") >= tau)
         .select("d1", "d2", "jaccard")
     )
+
+
+def exact_jaccard_pairs(docs: DataFrame, tau: float) -> DataFrame:
+    """X-LLM-2: all doc pairs with token-set Jaccard >= tau."""
+    return token_jaccard_pairs(doc_tokens(docs), tau)
 
 
 def word_ngrams(docs: DataFrame, n: int = 2) -> DataFrame:
@@ -144,7 +174,7 @@ def word_ngrams(docs: DataFrame, n: int = 2) -> DataFrame:
     # per-position slice lambda below is loop-invariant in the token
     # array, but inlined (collapsed) it re-tokenizes once per gram —
     # measured 2.17s -> 0.59s for the 5-gram decontamination scan at
-    # sf0.1 (r14; the same hazard simhash's round-4 barrier documents)
+    # sf0.1 (r14; the hazard hofbarrier records)
     w = barrier(
         docs.filter(F.size(toks) >= n).select("doc_id", toks.alias("w"))
     )
@@ -161,28 +191,8 @@ def ngram_jaccard_pairs(docs: DataFrame, tau: float, n: int = 2) -> DataFrame:
     """N-gram-shingle Jaccard near-dup: same inverted-index join as the
     unigram rung but over word n-grams — order-sensitive, so it
     separates docs that share vocabulary but not phrasing (exactly what
-    the tiny shared vocabulary of the fixtures defeats for unigrams).
-    Sizes attach post-aggregation (the doc_tokens r14 note)."""
-    # three consumers (sizes + both join sides): shingle once
-    toks = word_ngrams(docs, n).persist()
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = toks.alias("a"), toks.alias("b")
-    shared = (
-        a.join(b, "tok")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
-    return (
-        shared.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= tau)
-        .select("d1", "d2", "jaccard")
-    )
+    the tiny shared vocabulary of the fixtures defeats for unigrams)."""
+    return token_jaccard_pairs(word_ngrams(docs, n), tau)
 
 
 def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
@@ -252,10 +262,8 @@ def lsh_candidate_pairs(sigs: DataFrame, n_hashes: int = N_MINHASH,
 def minhash_lsh_pairs(docs: DataFrame, tau: float,
                       n_hashes: int = N_MINHASH,
                       band_rows: int | None = None) -> DataFrame:
-    """Rung 3 end-to-end: LSH candidates → exact Jaccard verification.
-
-    The verification join re-derives token sets only for candidate
-    docs (semi-join pruned), so the exact step is linear in candidates.
+    """Rung 3 end-to-end: LSH candidates → the shared exact Jaccard
+    verification (`_candidate_shared` + `_jaccard_filter`).
 
     ROWS-PER-BAND IS THE PRECISION KNOB: a pair with Jaccard j collides
     per band with probability j^band_rows, so any corpus with a nonzero
@@ -286,26 +294,8 @@ def minhash_lsh_pairs(docs: DataFrame, tau: float,
     sigs = minhash_signatures(docs, n_hashes)
     cands = lsh_candidate_pairs(sigs, n_hashes, band_rows)
     # three consumers (sizes + both exact-verify sides): tokenize once
-    toks = doc_tokens(docs).persist()
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    t1 = toks.select(F.col("doc_id").alias("d1"), "tok")
-    t2 = toks.select(F.col("doc_id").alias("d2"), "tok")
-    shared = (
-        cands.join(t1, "d1")
-        .join(t2, ["d2", "tok"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
-    return (
-        shared.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= tau)
-        .select("d1", "d2", "jaccard")
-    )
+    toks = managed_persist(doc_tokens(docs))
+    return _jaccard_filter(_candidate_shared(cands, toks), toks, tau)
 
 
 def simhash(docs: DataFrame, n_bits: int = 63) -> DataFrame:
@@ -321,24 +311,20 @@ def simhash(docs: DataFrame, n_bits: int = 63) -> DataFrame:
     just to reassemble what the row already had; output is
     bit-identical (the vote sum is order-independent).
 
-    The single-element explode below is a deliberate CollapseProject
-    BARRIER, not noise: without a Generate node between the hash-array
-    projection and the bit folds, Catalyst collapses the two projects
-    and inlines the hs expression into the per-bit fold lambda — the
-    token hashing then re-executes once PER BIT (63x; measured 3.6s vs
-    1.1s at sf0.1 under the noop sink). The Generate stays map-side
-    (row multiplier 1) and costs nothing.
+    The hash array sits behind a `hofbarrier.barrier` so the per-bit
+    folds reference it instead of re-hashing once per bit (the 63x
+    hazard that module records).
 
     Null-text docs are dropped up front (same contract as
     minhash_signatures: no token set → no fingerprint; the round-3
     explode shape never emitted rows for them either)."""
-    agg = docs.filter(F.col("text").isNotNull()).select(
+    agg = barrier(docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
         F.transform(
             _token_set(F.col("text")),
             lambda t: F.xxhash64(t),
         ).alias("hs"),
-    ).select("doc_id", "hs", F.explode(F.array(F.lit(1))).alias("_one"))
+    ))
     bits = F.sequence(F.lit(0), F.lit(n_bits - 1))
     # shiftright/shiftleft via call_function: the Python wrappers require
     # literal shift amounts, the SQL functions accept column expressions
@@ -498,11 +484,13 @@ def jaccard_pairs_prefix(docs: DataFrame, tau: float) -> DataFrame:
     # frequencies, the prefix pass, both exact-verify sides); persist
     # so tokenization runs once — a PPJoin implementation materializes
     # its tokenized relation, it doesn't re-tokenize per index pass
-    toks = doc_tokens(docs).persist()
+    toks = managed_persist(doc_tokens(docs))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    prefix = (
+    # both sides of the candidate self-join read the prefix; unpersisted,
+    # the rarity-order window pass runs twice
+    prefix = managed_persist(
         toks.join(freq, "tok")
         .join(sizes, "doc_id")
         .withColumn("r", F.row_number().over(w))
@@ -510,8 +498,6 @@ def jaccard_pairs_prefix(docs: DataFrame, tau: float) -> DataFrame:
             F.col("r") <= F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
         )
         .select("doc_id", "tok")
-        .persist()  # both sides of the candidate self-join; unpersisted,
-        # the rarity-order window pass runs twice
     )
     a = prefix.select(F.col("doc_id").alias("d1"), "tok")
     b = prefix.select(F.col("doc_id").alias("d2"), "tok")
@@ -521,24 +507,7 @@ def jaccard_pairs_prefix(docs: DataFrame, tau: float) -> DataFrame:
         .select("d1", "d2")
         .distinct()
     )
-    t1 = toks.select(F.col("doc_id").alias("d1"), "tok")
-    t2 = toks.select(F.col("doc_id").alias("d2"), "tok")
-    shared = (
-        cand.join(t1, "d1")
-        .join(t2, ["d2", "tok"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
-    return (
-        shared.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= tau)
-        .select("d1", "d2", "jaccard")
-    )
+    return _jaccard_filter(_candidate_shared(cand, toks), toks, tau)
 
 
 @register(

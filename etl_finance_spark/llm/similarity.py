@@ -75,14 +75,6 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     row set is stable across engines (an unrounded rank could flip on
     1-ulp summation differences — SURVEY.md §7.3 item 4 applied to
     floats)."""
-    q = queries.select(
-        F.col("vec_id").alias("qid"), F.col("vec").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = vectors.select(
-        F.col("vec_id").alias("cid"), F.col("vec").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
     # Deterministic sides: ALWAYS broadcast the bounded query set and
     # stream the corpus. Left to size estimates, the planner's pick
     # flips with cache state (a just-materialized InMemoryRelation
@@ -95,10 +87,26 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     # quadratic compute it feeds dominates it asymptotically, and the
     # fixture corpus otherwise arrives as 1-2 parquet splits.
     pairs = (
-        c.hint("rebalance")  # AQE right-sizes the corpus partitions
-        .crossJoin(F.broadcast(q))
+        _side(vectors, "c").hint("rebalance")  # AQE right-sizes the corpus
+        .crossJoin(F.broadcast(_side(queries, "q")))
         .filter(F.col("cid") != F.col("qid"))
     )
+    return _topk_by_cosine(pairs, k)
+
+
+def _side(df: DataFrame, p: str) -> DataFrame:
+    """One side of a cosine pair: ``{p}id``, ``{p}v``, ``{p}n`` from a
+    with_unit_vec frame (p = "q" for queries, "c" for the corpus)."""
+    return df.select(
+        F.col("vec_id").alias(f"{p}id"), F.col("vec").alias(f"{p}v"),
+        F.col("nrm").alias(f"{p}n"),
+    )
+
+
+def _topk_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """THE top-k decision every cosine rung ends in: rank each query's
+    (qid, cid) pairs by the ROUNDED cosine with cid tiebreak and keep k
+    (see cosine_topk for why the rank uses the rounded value)."""
     cos = F.round(
         dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
     )
@@ -109,6 +117,18 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rn") <= k)
         .select("qid", "cid", "cosine")
     )
+
+
+def exact_rerank(cand: DataFrame, queries: DataFrame, vectors: DataFrame,
+                 k: int) -> DataFrame:
+    """Exact cosine top-k over an ANN rung's (qid, cid) candidates:
+    vectors re-attach only now — the bounded query side broadcast, the
+    corpus side joined on cid — so candidate generation and its dedup
+    shuffle ids, never 64-dim arrays."""
+    pairs = cand.join(F.broadcast(_side(queries, "q")), "qid").join(
+        _side(vectors, "c"), "cid"
+    )
+    return _topk_by_cosine(pairs, k)
 
 
 def _planes(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
@@ -252,9 +272,9 @@ def ann_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
             F.col("vec_id").alias("qid"), "band_idx", "band_bits",
         )
     # BROADCAST the query bands (r15, guide §3.1): the query set is the
-    # bounded side by design (the same convention under which qv
-    # broadcasts for the rerank below), so qb is |Q| x n_bands tiny
-    # rows — a broadcast-hash join removes BOTH band-key shuffles of
+    # bounded side by design (the same convention under which
+    # exact_rerank broadcasts the query vectors), so qb is |Q| x n_bands
+    # tiny rows — a broadcast-hash join removes BOTH band-key shuffles of
     # the former salted sort-merge join (plan: 2 Exchange + 2 Sort
     # gone), and with them the low-cardinality-band-key parallelism
     # problem salting existed to patch: the probe side's parallelism is
@@ -267,25 +287,7 @@ def ann_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
         .select("qid", "cid")
         .distinct()
     )
-    qv = queries.select(
-        F.col("vec_id").alias("qid"), F.col("vec").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = vectors.select(
-        F.col("vec_id").alias("cid"), F.col("vec").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    pairs = cand.join(F.broadcast(qv), "qid").join(cv, "cid")
-    cos = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.withColumn("cosine", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return exact_rerank(cand, queries, vectors, k)
 
 
 # ---------------------------------------------------------------------------
@@ -585,25 +587,7 @@ def ann_ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
         cent = ivf_centroids(vectors)
     cand = ivf_candidates(ivf_corpus_cells(vectors, cent),
                           ivf_query_cells(queries, cent))
-    qv = queries.select(
-        F.col("vec_id").alias("qid"), F.col("vec").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    cv = vectors.select(
-        F.col("vec_id").alias("cid"), F.col("vec").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    pairs = cand.join(F.broadcast(qv), "qid").join(cv, "cid")
-    cos = F.round(
-        dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        pairs.withColumn("cosine", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cosine")
-    )
+    return exact_rerank(cand, queries, vectors, k)
 
 
 # Session-scoped IVF index memo: (applicationId, sf_dir) -> checkpointed

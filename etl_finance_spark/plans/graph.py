@@ -38,7 +38,7 @@ change.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from etl_finance_spark.catalog import table
 from etl_finance_spark.lineage import ensure_persisted
@@ -59,6 +59,20 @@ ITEMS_CTE_SQL = f"""items AS (
     )"""
 
 _EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}
+
+
+def basket_pairs(a: str, b: str) -> Column:
+    """All (parts[i], parts[j]) with i < j of a sorted ``parts`` array
+    column, as structs ``(a, b)`` — row-local, fan-out bounded by basket
+    size squared. The ascending sort makes a < b by construction: no
+    orientation filter, no dedup needed."""
+    return F.flatten(F.transform(
+        F.col("parts"),
+        lambda x, i: F.transform(
+            F.slice(F.col("parts"), i + F.lit(2), F.size(F.col("parts"))),
+            lambda y: F.struct(x.alias(a), y.alias(b)),
+        ),
+    ))
 
 
 def edges_from_items(items: DataFrame,
@@ -87,17 +101,8 @@ def edges_from_items(items: DataFrame,
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
         .filter(F.size("parts") <= max_basket)
     )
-    # all (parts[i], parts[j]) with i < j: ascending sort makes p1 < p2
-    # by construction — no orientation filter, no dedup needed
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + F.lit(2), F.size(F.col("parts"))),
-            lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-        ),
-    ))
     return (
-        baskets.select(F.explode(pair_structs).alias("pr"))
+        baskets.select(F.explode(basket_pairs("p1", "p2")).alias("pr"))
         .select("pr.p1", "pr.p2")
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("n_orders"))

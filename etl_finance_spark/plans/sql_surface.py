@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_finance_spark.catalog import table
 from etl_finance_spark.lineage import cut_lineage
+from etl_finance_spark.plans.graph import basket_pairs
 from etl_finance_spark.registry import register
 
 # Shared verbatim by the Spark query and the DuckDB oracle: identical
@@ -121,15 +122,8 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )
-    pair_structs = F.flatten(F.transform(
-        F.col("parts"),
-        lambda x, i: F.transform(
-            F.slice(F.col("parts"), i + F.lit(2), F.size(F.col("parts"))),
-            lambda y: F.struct(x.alias("src"), y.alias("dst")),
-        ),
-    ))
     canon = (
-        baskets.select(F.explode(pair_structs).alias("pr"))
+        baskets.select(F.explode(basket_pairs("src", "dst")).alias("pr"))
         .select("pr.src", "pr.dst")
         .distinct()
     )

@@ -602,3 +602,37 @@ def test_corpus_memo_survives_external_release(spark):
         "memo accessor must re-pin after an external release"
     )
     assert healed.count() > 0
+
+
+def test_jaccard_rungs_release_their_persists(spark):
+    """Every Jaccard rung routes its persisted token relation (and the
+    prefix rung its prefix frame) through lineage.managed_persist: after
+    a noop run and the harness drain release_cuts(), the executor cache
+    holds exactly as many RDDs as before. A bare .persist() pins one
+    per call for the session. The crafted corpus is built by no other
+    test, so no cache entry is shared with one."""
+    from etl_finance_spark.lineage import release_cuts
+    from etl_finance_spark.llm.dedup import (
+        BAND_ROWS, jaccard_pairs_prefix, ngram_jaccard_pairs,
+    )
+    from etl_finance_spark.measure import run_noop
+
+    # pairs (2k, 2k+1) share 8 of 10 tokens: Jaccard 0.8 per pair
+    docs = spark.createDataFrame(
+        [(i, " ".join([f"t{i // 2}_{j}" for j in range(8)] + [f"u{i}"]))
+         for i in range(60)],
+        "doc_id long, text string",
+    )
+    jsc = spark.sparkContext._jsc
+    release_cuts()
+    for name, build in (
+        ("exact", lambda: exact_jaccard_pairs(docs, JACCARD_TAU)),
+        ("ngram", lambda: ngram_jaccard_pairs(docs, 0.2)),
+        ("minhash", lambda: minhash_lsh_pairs(docs, JACCARD_TAU,
+                                              band_rows=BAND_ROWS)),
+        ("prefix", lambda: jaccard_pairs_prefix(docs, JACCARD_TAU)),
+    ):
+        before = len(jsc.getPersistentRDDs())
+        run_noop(build())
+        release_cuts()
+        assert len(jsc.getPersistentRDDs()) == before, name

@@ -4,6 +4,8 @@ windows) must survive refactors — asserted against .explain output."""
 
 from __future__ import annotations
 
+import re
+
 from etl_finance_spark import registry
 
 from conftest import SF_CORRECT, explain_simple
@@ -532,6 +534,24 @@ def test_signature_passes_are_zero_shuffle(spark):
     # Generate node separates the hash-array projection from the bit
     # folds (without it the token hashing re-executes once per bit)
     assert "Generate" in plan_of(simhash(docs))
+
+
+def test_ann_candidate_joins_broadcast_the_query_side(spark):
+    """The ANN candidate stages are broadcast-hash joins that BUILD the
+    bounded query side: q_ann_lsh_topk on (band_idx, band_bits),
+    q_ann_ivf_topk on cell. The low-cardinality band/cell key never
+    becomes a shuffle partition key."""
+    for name, key, part in (
+        ("q_ann_lsh_topk", r"band_idx#\d+, band_bits#\d+L",
+         "hashpartitioning(band_idx"),
+        ("q_ann_ivf_topk", r"cell#\d+", "hashpartitioning(cell"),
+    ):
+        plan = _simple(spark, name)
+        assert re.search(
+            rf"BroadcastHashJoin \[{key}\], \[{key}\], Inner, BuildRight",
+            plan,
+        ), f"{name}:\n{plan}"
+        assert part not in plan, f"{name}:\n{plan}"
 
 
 def test_model_training_is_one_python_task_over_packed_sample(

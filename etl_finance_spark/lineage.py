@@ -15,18 +15,12 @@ HOW it truncates is a deployment decision, not an algorithm one:
   directory (HDFS/S3) — survives any executor loss, at the cost of one
   write+read round trip per cut. Right for a 1000-executor run, where
   losing one executor mid-iteration 7 of 8 must not restart the job.
-  (Bare ``checkpoint()`` recomputes the frame for the write — the
-  classic persist-before-checkpoint caveat — and, unlike
-  ``localCheckpoint``, does NOT cache, so a multi-consumer frame
-  (triangle_count's oriented edges feed three join branches) would
-  recompute per consumer too. ``cut_lineage`` therefore persists the
-  input before a reliable cut: the first materialization caches, the
-  write job and every other consumer read the cache. Eager cuts
-  unpersist immediately after the write (the checkpoint files now
-  serve reads); non-eager cuts leave the persist in place — the same
-  evictable/spillable block profile localCheckpoint has — and register
-  it for a post-consumption ``release_cuts()`` so the block-manager
-  registry drains per query instead of growing for the session.)
+  (Bare ``checkpoint()`` does NOT cache, unlike ``localCheckpoint``:
+  the write job and every consumer of a multi-consumer frame
+  (triangle_count's oriented edges feed three join branches) would each
+  recompute it — the persist-before-checkpoint caveat. ``cut_lineage``
+  therefore persists the input of a reliable cut and registers the
+  persist for a post-consumption ``release_cuts()``.)
 
 ``cut_lineage`` picks by the session's own deployment signal: a
 cluster submit sets ``spark.sparkContext.setCheckpointDir(<dfs path>)``
@@ -42,11 +36,10 @@ import threading
 
 from pyspark.sql import DataFrame
 
-# Frames persisted by NON-eager reliable cuts. An eager cut unpersists
-# right after the checkpoint write; a non-eager cut cannot (the write
-# happens at the frame's first action, after this function returned), so
-# the persist would otherwise pin a cached copy for the session lifetime
-# — one per iteration per iterative query on checkpoint-dir deployments.
+# Frames persisted by reliable cuts and managed_persist. A cut cannot
+# unpersist its input (the write happens at the frame's first action,
+# after cut_lineage returned), so each persist would pin a cached copy
+# for the session — one per pass per iterative query.
 # The contract: a run harness calls release_cuts() AFTER consuming each
 # query's result (bench.py and scripts/diffcheck.py do; a long-lived
 # cluster job should too), so the registry drains per query instead of
@@ -64,8 +57,8 @@ _PENDING_LOCK = threading.Lock()
 
 
 def release_cuts() -> int:
-    """Unpersist every frame a non-eager reliable cut persisted and
-    clear the registry; returns how many were released. Call after
+    """Unpersist every frame a reliable cut (or managed_persist)
+    persisted and clear the registry; returns how many. Call after
     consuming a query's result (see the registry comment above).
     Idempotent and safe at any time — a released frame's checkpoint
     (materialized or not) still serves its consumers; an unmaterialized
@@ -96,7 +89,7 @@ def managed_persist(df: DataFrame) -> DataFrame:
     intermediate (frequent_items' candidate frame, an ANN corpus
     feeding training + routing + rerank). A bare ``.persist()`` inside
     an operator pins executor storage for the session with no release
-    path; this gives it the same per-query lifecycle the non-eager
+    path; this gives it the same per-query lifecycle the reliable
     checkpoint persists have. Skips (and does not register) frames
     Spark's cache manager already covers — plan-equal to a live cache
     entry, or persisted by a caller/memo that owns the lifecycle.
@@ -121,26 +114,16 @@ def ensure_persisted(df: DataFrame) -> DataFrame:
     return df
 
 
-def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+def cut_lineage(df: DataFrame) -> DataFrame:
     """Truncate ``df``'s plan lineage, reliably if the session has a
-    checkpoint directory configured, executor-locally otherwise."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        # persist-before-checkpoint: without it the write job recomputes
-        # the frame and every consumer stage recomputes it again
-        # (checkpoint() does not cache; localCheckpoint() does). Only
-        # unpersist what THIS call persisted — a caller-persisted frame
-        # keeps its cache.
-        if eager:
-            ours = _uncached(df)
-            if ours:
-                df.persist()
-            out = df.checkpoint(eager=True)
-            if ours:
-                df.unpersist()
-            return out
-        # non-eager: identical lifecycle to a managed persist — the
-        # write happens at the first action, the drain post-consumption
-        managed_persist(df)
+    checkpoint directory configured, executor-locally otherwise.
+
+    The cut adds no job of its own: the frame materializes and caches at
+    the first job that reads it. Taking the cut still executes the
+    physical plan, so under adaptive query execution every shuffle stage
+    above the cut runs then — AQE finishes those stages to plan the
+    rest — and a build that cuts a shuffled frame runs jobs."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        managed_persist(df)  # persist-before-checkpoint (module doc)
         return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=False)

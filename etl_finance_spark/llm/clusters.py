@@ -44,11 +44,12 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     only ever decreasing), and the node set is fixed — so the label SUM
     strictly decreases iff any label changed, and sum equality with the
     previous pass IS the fixpoint. One map-side partial aggregate over
-    the just-checkpointed frame replaces the former old-vs-new
-    equi-join + isEmpty probe, which cost two node-cardinality shuffles
-    per pass at scale for a boolean answer. The sum accumulates as
-    decimal(38,0) (never long) so it cannot overflow-wrap into a false
-    fixpoint; the row count rides along as a free structural tripwire.
+    the just-cut frame (it is also the job that materializes the cut)
+    replaces the former old-vs-new equi-join + isEmpty probe, which
+    cost two node-cardinality shuffles per pass at scale for a boolean
+    answer. The sum accumulates as decimal(38,0) (never long) so it
+    cannot overflow-wrap into a false fixpoint; the row count rides
+    along as a free structural tripwire.
 
     Lineage management is the non-obvious scale requirement: the label
     frame feeds the next iteration several times, so the unchecked plan

@@ -137,14 +137,13 @@ def pq_train(vectors: DataFrame, train_cap: int = PQ_TRAIN_CAP) -> DataFrame:
     Deterministic end to end: the hash-ordered training sample, the
     lowest-vec_id seeding and the lowest-code argmin tie-break are all
     partition-invariant — the same corpus yields the same model on any
-    cluster layout (pinned in tests/test_pq.py). The non-eager cut is
-    ivf_centroids': consumers never replay training, and constructing a
-    consumer does not train (the first real action does)."""
+    cluster layout (pinned in tests/test_pq.py). The cut is
+    ivf_centroids': consumers never replay training."""
     model = train_sample(vectors, train_cap).mapInPandas(
         partial(_pq_train, m=M, dsub=DSUB, ks=KS, iters=PQ_LLOYD),
         _PQW_SCHEMA,
     )
-    return cut_lineage(model, eager=False)
+    return cut_lineage(model)
 
 
 def _books_grouped(pqw: Column) -> Column:
@@ -303,7 +302,11 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, k: int,
     A disjoint query set whose vec_ids collide with corpus ids would
     lose that one legitimate neighbor per collision; re-key such a
     query set (e.g. negate or offset vec_id) before calling, exactly
-    as for ann_ivf_topk."""
+    as for ann_ivf_topk.
+
+    Precondition: ``queries`` is hard-broadcast, so it must be bounded
+    (the declared queries bound it at N_QUERY rows); an unbounded frame
+    fails at the broadcast instead of falling back to a shuffle."""
     from etl_finance_spark.llm.similarity import (
         dot, ivf_candidates, ivf_centroids, ivf_query_cells,
     )

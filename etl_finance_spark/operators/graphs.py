@@ -34,28 +34,17 @@ def pagerank(edges: DataFrame, damp: float, iters: int) -> DataFrame:
     pass — and each pass's ranks cut lineage likewise.
     Property-tested against a Python power-iteration reference in
     tests/test_property.py."""
-    # eager=False on every cut: the iteration count is FIXED (no
-    # convergence check needs a mid-build action), so constructing the
-    # query must not run the edge rollup + all passes as a side effect
-    # (the same construction-time-execution rule ivf_centroids follows;
-    # plan sweeps and driver passes build every query before running
-    # any). Lineage still truncates at construction — the cut returns a
-    # LogicalRDD — and each pass caches on first materialization. The
-    # iters+2 non-eager persists this build registers are drained by
-    # lineage.release_cuts() AFTER the result is consumed (the run
-    # harnesses call it per query) — never at the next build, which
-    # could precede this query's first action (lineage.py contract).
     sym = cut_lineage(edges.withColumn(
         "w",
         F.lit(1.0) / F.count("*").over(Window.partitionBy("src")).cast("double"),
-    ), eager=False)
+    ))
     nodes = sym.select(F.col("src").alias("node")).distinct()
     nn = nodes.agg(F.count("*").cast("double").alias("n"))
     base = cut_lineage(nodes.crossJoin(F.broadcast(nn)).select(
         "node",
         (F.lit(1.0) / F.col("n")).alias("pr0"),
         ((1 - damp) / F.col("n")).alias("teleport"),
-    ), eager=False)
+    ))
     pr = base.select("node", F.col("pr0").alias("pr"))
     for _ in range(iters):
         contrib = (
@@ -63,17 +52,11 @@ def pagerank(edges: DataFrame, damp: float, iters: int) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("pr") * F.col("w")).alias("contrib"))
         )
-        pr = cut_lineage(
-            base.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("teleport")
-                    + damp * F.coalesce("contrib", F.lit(0.0))
-                ).alias("pr"),
-            ),
-            eager=False,
-        )
+        pr = cut_lineage(base.join(contrib, "node", "left").select(
+            "node",
+            (F.col("teleport") + damp * F.coalesce("contrib", F.lit(0.0)))
+            .alias("pr"),
+        ))
     return pr
 
 
@@ -110,13 +93,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         (F.col("d1") == F.col("d2")) & (F.col("p1") < F.col("p2"))
     )
     # the oriented frame feeds all three join branches — cut lineage
-    # once (non-eager: building the query must not run a job) or each
-    # branch re-executes the degree joins; the persist drains via
-    # lineage.release_cuts() after consumption (lineage.py contract)
+    # once or each branch re-executes the degree joins; a reliable
+    # cut's persist drains via lineage.release_cuts() after consumption
+    # (lineage.py contract)
     o = cut_lineage(g.select(
         F.when(p1_first, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(p1_first, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-    ), eager=False)
+    ))
     e1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     e3 = o.select(F.col("src").alias("a"), F.col("dst").alias("c"))

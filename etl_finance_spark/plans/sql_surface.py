@@ -16,8 +16,6 @@ operators/windows.py top-k).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,8 +77,6 @@ SELECT pk, CAST(min(depth) AS BIGINT) AS depth
 FROM bfs GROUP BY pk
 """
 
-_BFS_SEQ = itertools.count()
-
 
 @register("q_recursive_bfs", oracle=_BFS_SQL)
 def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,10 +85,10 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand along same-order edges, keep each part's minimum depth.
     Spark 4 executes the recursion as an iterative union-of-levels
     plan, and it INLINES non-recursive CTEs into every level — so the
-    loop-invariant edge list is materialized first (cut_lineage,
-    the same invariant-materialization pattern as q_pagerank) and the
-    recursion runs over the checkpointed view: each level is then one
-    hash join against settled data instead of a re-derived self-join.
+    loop-invariant edge list cuts lineage (cut_lineage, the same
+    invariant-materialization pattern as q_pagerank), materializing at
+    the first level: each later level is then one hash join against
+    settled data instead of a re-derived self-join.
     Bounds that keep recursion sane are explicit: order-sampled edges
     (1/10), depth ≤ 2, min-depth dedup at the end. (The edge build
     here is a demonstration subgraph; a production co-purchase edge
@@ -100,14 +96,9 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mega-order guard on the quadratic pair fan-out.) UNBOUNDED closure
     this way is exponential in path count — full-graph reachability at
     100 TB belongs to the delta-checked connected-components fixpoint
-    (llm/clusters.py:84), which this query exists to contrast. The
+    (llm/clusters.py), which this query exists to contrast. The
     oracle runs the same logic as one self-contained SQL text (DuckDB
-    evaluates each CTE once, so it needs no materialization hint).
-    View hygiene (ADVICE r3): the temp views get per-call unique names
-    and are dropped as soon as spark.sql has (eagerly) resolved them —
-    concurrent callers on a shared session can't clobber each other,
-    and no session-global view pins the checkpointed edge blocks after
-    the result is released."""
+    evaluates each CTE once, so it needs no materialization hint)."""
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 10 == 0
     )
@@ -130,15 +121,8 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cut_lineage(canon.union(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ))
-    k = next(_BFS_SEQ)
-    ev, sv = f"bfs_edges_{k}", f"bfs_seed_{k}"
-    edges.createOrReplaceTempView(ev)
     seed = li.agg(F.min("l_partkey").cast("long").alias("pk"))
-    seed.createOrReplaceTempView(sv)
-    out = spark.sql(_BFS_RECURSE_SQL.format(edges=ev, seed=sv))
-    spark.catalog.dropTempView(ev)
-    spark.catalog.dropTempView(sv)
-    return out
+    return spark.sql(_BFS_RECURSE_SQL, edges=edges, seed=seed)
 
 
 @register("q_lateral_topn", oracle=_LATERAL_SQL)

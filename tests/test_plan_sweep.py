@@ -126,8 +126,8 @@ def _simple(spark, name: str) -> str:
 def inventory_dfs(spark):
     """Every declared query's DataFrame, built ONCE for the module:
     both sweep tests iterate the same full inventory of plans, and
-    construction is not free (q_recursive_bfs runs an eager
-    lineage-cut job, the similarity family touches session memos)."""
+    construction is not free (a lineage cut runs the shuffle stages
+    above it, the similarity family touches session memos)."""
     return {name: SPECS[name].fn(spark, SF_CORRECT) for name in sorted(SPECS)}
 
 

@@ -566,7 +566,7 @@ def test_model_training_is_one_python_task_over_packed_sample(
 
     emb = similarity.with_unit_vec(table(spark, SF_CORRECT, "embeddings"))
     for mod in (similarity, pq):
-        monkeypatch.setattr(mod, "cut_lineage", lambda df, eager=True: df)
+        monkeypatch.setattr(mod, "cut_lineage", lambda df: df)
     for name, model in (("ivf", similarity.ivf_centroids(emb)),
                         ("pq", pq.pq_train(emb))):
         maps = [n for n in _lp_walk(model._jdf.queryExecution().optimizedPlan())

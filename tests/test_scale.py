@@ -121,6 +121,37 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert picked.count() == want and want > 0
 
 
+def test_cut_lineage_adds_no_job_of_its_own(spark):
+    """A lineage cut runs no job of its own: the frame materializes at
+    the first job that reads it. What a cut does run is the shuffle
+    stages above it — taking the cut executes the physical plan, and
+    adaptive query execution (on in the session) finishes every
+    exchange stage to plan the rest. So a cut keeps construction free
+    of jobs only for a frame with no exchange; a one-groupBy frame
+    runs its one shuffle stage when cut, and no cut flag avoids that."""
+    from etl_finance_spark.lineage import cut_lineage
+
+    sc = spark.sparkContext
+
+    def cut_jobs(group, df):
+        sc.setJobGroup(group, group)
+        try:
+            out = cut_lineage(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    ids = spark.range(64)
+    n_map, flat = cut_jobs("cut_no_exchange", ids.select(
+        (F.col("id") * 2).alias("x")))
+    n_agg, agg = cut_jobs("cut_one_groupby", ids.groupBy(
+        (F.col("id") % 4).alias("k")).count())
+    assert (n_map, n_agg) == (0, 1)
+    assert flat.count() == 64
+    assert sorted(map(tuple, agg.collect())) == [(k, 16) for k in range(4)]
+
+
 def test_cut_lineage_reliable_mode_equivalence(tmp_path):
     """lineage.cut_lineage is the deployment seam: with no checkpoint
     dir the iterative operators cut lineage executor-locally; the
@@ -130,7 +161,7 @@ def test_cut_lineage_reliable_mode_equivalence(tmp_path):
     checkpoint dir cannot be unset on a live SparkContext — the shared
     fixture session must not inherit one. Asserts both modes produce
     identical results for connected components, PageRank, and the
-    non-eager IVF quantizer build (the eager=False reliable path), and
+    IVF quantizer build (a cut read only at the first action), and
     that reliable mode really wrote checkpoint files."""
     import json
     import os
@@ -166,7 +197,7 @@ def run():
     cc = sorted(map(tuple, connected_components(cc_edges).collect()))
     pr = sorted((r["node"], round(r["pr"], 12))
                 for r in pagerank(pr_edges, 0.85, 5).collect())
-    # the eager=False lineage-cut path (Lloyd passes + model packing)
+    # a cut first read by the result's own action (model packing)
     model = sorted(map(tuple, ivf_centroids(vecs).collect()))
     return cc, pr, model
 
@@ -191,22 +222,26 @@ print(json.dumps({"cc_equal": local_cc == rel_cc,
 
 
 def test_release_cuts_bounds_noneager_persists(tmp_path):
-    """ADVICE r4: non-eager reliable cuts persist their input but can
-    only unpersist AFTER the checkpoint materializes (which happens at
-    the frame's first action, long after cut_lineage returned) — left
+    """ADVICE r4: reliable cuts persist their input but can only
+    unpersist AFTER the checkpoint materializes (which happens at the
+    frame's first action, long after cut_lineage returned) — left
     alone, every pagerank call on a checkpoint-dir deployment pins
     iters+2 cached frames for the session lifetime, unbounded across
-    queries. The contract (lineage.py): run harnesses call
-    release_cuts() AFTER consuming each result — never at the next
-    build, which in a build-all-then-run flow would strip a pending
-    query's persist-before-checkpoint protection before its first
-    action. Witness all three properties: (a) building a second query
-    does NOT drain the first's registry (no premature unpersist),
-    (b) both pending queries still answer correctly after the other
-    ran, (c) an explicit post-consumption release drains to zero,
-    actually unpersists, and later runs stay correct. Subprocess for
-    the same reason as the equivalence test above (checkpoint dir
-    cannot be unset on the shared session)."""
+    queries, and every connected_components call one per pass. The
+    contract (lineage.py): run harnesses call release_cuts() AFTER
+    consuming each result — never at the next build, which in a
+    build-all-then-run flow would strip a pending query's
+    persist-before-checkpoint protection before its first action.
+    Witness four properties: (a) building a second query does NOT
+    drain the first's registry (no premature unpersist), (b) both
+    pending queries still answer correctly after the other ran, (c) an
+    explicit post-consumption release drains to zero, actually
+    unpersists, and later runs stay correct, (d) connected components'
+    pass cuts register too (its label_sum probes materialize them
+    during the build), drain to zero, and its labels read back
+    unchanged after the release. Subprocess for the same reason as the
+    equivalence test above (checkpoint dir cannot be unset on the
+    shared session)."""
     import json
     import os
     import subprocess
@@ -223,6 +258,7 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 spark.sparkContext.setCheckpointDir(%(ckdir)r)
 from etl_finance_spark import lineage
+from etl_finance_spark.llm.clusters import connected_components
 from etl_finance_spark.operators.graphs import pagerank
 
 rows = [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1)]
@@ -252,7 +288,16 @@ cached_after = len(spark.sparkContext._jsc.getPersistentRDDs())
 r3 = snap(pagerank(edges, 0.85, 4))
 lineage.release_cuts()
 r1_again = snap(q1)
+lineage.release_cuts()
+cc = connected_components(spark.createDataFrame(
+    [(1, 2), (2, 3), (4, 5), (7, 7)], "d1 long, d2 long"))
+cc_registered = len(lineage._PENDING_UNPERSIST)
+cc_rows = sorted(map(tuple, cc.collect()))
+cc_released = lineage.release_cuts()
 print(json.dumps({
+    "cc_registered": cc_registered, "cc_released": cc_released,
+    "cc_pending": len(lineage._PENDING_UNPERSIST),
+    "cc_rows": cc_rows, "cc_after": sorted(map(tuple, cc.collect())),
     "equal": r1 == r2 == r3 == r1_again,
     "after_build1": after_build1, "after_build2": after_build2,
     "released": released,
@@ -264,13 +309,18 @@ print(json.dumps({
     assert out.returncode == 0, out.stderr[-2000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert got["equal"], got
-    assert got["after_build1"] > 0, got  # non-eager cuts do register
+    assert got["after_build1"] > 0, got  # reliable cuts do register
     # building q2 must NOT drain q1's pending persists (accumulates
     # until an explicit post-consumption release)
     assert got["after_build2"] == 2 * got["after_build1"], got
     assert got["released"] == got["after_build2"], got
     assert got["pending_after_release"] == 0, got
     assert got["cached_after"] < got["cached_before"], got
+    assert got["cc_registered"] > 0, got  # one per pass cut + the edges
+    assert got["cc_released"] == got["cc_registered"], got
+    assert got["cc_pending"] == 0, got
+    want = [[1, 1], [2, 1], [3, 1], [4, 4], [5, 4], [7, 7]]
+    assert got["cc_rows"] == got["cc_after"] == want, got
 
 
 def test_aqe_splits_skewed_join_partition(spark):

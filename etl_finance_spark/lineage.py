@@ -1,9 +1,9 @@
 """Lineage cuts for iterative plans, deployment-aware.
 
-The iterative operators (connected components, PageRank, Lloyd passes,
-bounded-depth BFS) re-feed a frame into the next pass, so the
-unchecked plan doubles per iteration — optimizer time explodes long
-before data size matters. Each pass therefore truncates lineage.
+The iterative operators (connected components, PageRank, bounded-depth
+BFS) re-feed a frame into the next pass, so the unchecked plan doubles
+per iteration — optimizer time explodes long before data size matters.
+Each pass therefore truncates lineage.
 
 HOW it truncates is a deployment decision, not an algorithm one:
 

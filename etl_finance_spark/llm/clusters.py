@@ -19,6 +19,9 @@ from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
 from etl_finance_spark.lineage import cut_lineage
+from etl_finance_spark.llm.dedup import (
+    DOC_CAP, TOKS_CTE_SQL, exact_jaccard_pairs, jaccard_pairs_cte_sql,
+)
 from etl_finance_spark.registry import register
 
 
@@ -113,23 +116,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
 
 @register(
     "q_dedup_clusters",
-    oracle="""
-    WITH RECURSIVE toks AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-        FROM documents WHERE doc_id < 500
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id
-    ), shared AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), pairs AS (
-        SELECT d1, d2
-        FROM shared
-        JOIN sizes s1 ON s1.doc_id = d1
-        JOIN sizes s2 ON s2.doc_id = d2
-        WHERE round(c * 1.0 / (s1.n + s2.n - c), 6) >= 0.5
-    ), sym AS (
+    oracle=f"""
+    WITH RECURSIVE {TOKS_CTE_SQL}, {jaccard_pairs_cte_sql(0.5)}, sym AS (
         SELECT d1, d2 FROM pairs UNION ALL SELECT d2, d1 FROM pairs
     ), reach(node, r) AS (
         SELECT DISTINCT d1, d1 FROM sym
@@ -146,9 +134,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure (viable at oracle scale; the Spark side's
     delta-checked label propagation is the distributed formulation), so
     the iterative algorithm is EXACT-checked, not just unit-tested."""
-    from etl_finance_spark.llm.dedup import exact_jaccard_pairs
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < DOC_CAP)
     pairs = exact_jaccard_pairs(docs, tau=0.5)
     return connected_components(pairs)
 

@@ -146,6 +146,41 @@ def _jaccard_filter(shared: DataFrame, toks: DataFrame,
     )
 
 
+# The DuckDB twins of doc_tokens and token_jaccard_pairs /
+# _jaccard_filter: every exact-Jaccard oracle is ``toks`` (doc_id, tok)
+# followed by this one sizes -> shared -> pairs chain, so the oracles
+# cannot drift from each other or from the Spark verify step.
+TOKS_CTE_SQL = f"""toks AS (
+        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
+        FROM documents WHERE doc_id < {DOC_CAP}
+    )"""
+
+
+def jaccard_pairs_cte_sql(tau: float) -> str:
+    """``sizes``, ``shared`` and ``pairs(d1, d2, jaccard)`` CTE bodies
+    over a ``toks`` CTE: pairs with 6dp-rounded Jaccard >= tau."""
+    return f"""sizes AS (
+        SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id
+    ), shared AS (
+        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
+        FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ), pairs AS (
+        SELECT d1, d2, round(c * 1.0 / (s1.n + s2.n - c), 6) AS jaccard
+        FROM shared
+        JOIN sizes s1 ON s1.doc_id = d1
+        JOIN sizes s2 ON s2.doc_id = d2
+        WHERE round(c * 1.0 / (s1.n + s2.n - c), 6) >= {tau}
+    )"""
+
+
+# q_jaccard_pairs and q_jaccard_prefix compute the same relation
+_UNIGRAM_JACCARD_SQL = f"""
+    WITH {TOKS_CTE_SQL}, {jaccard_pairs_cte_sql(JACCARD_TAU)}
+    SELECT d1, d2, jaccard FROM pairs
+    """
+
+
 def exact_jaccard_pairs(docs: DataFrame, tau: float) -> DataFrame:
     """X-LLM-2: all doc pairs with token-set Jaccard >= tau."""
     return token_jaccard_pairs(doc_tokens(docs), tau)
@@ -382,27 +417,7 @@ def q_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_jaccard_pairs",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-        FROM documents WHERE doc_id < {DOC_CAP}
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id
-    ), shared AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT d1, d2,
-           round(c * 1.0 / (s1.n + s2.n - c), 6) AS jaccard
-    FROM shared
-    JOIN sizes s1 ON s1.doc_id = d1
-    JOIN sizes s2 ON s2.doc_id = d2
-    WHERE round(c * 1.0 / (s1.n + s2.n - c), 6) >= {JACCARD_TAU}
-    """,
-)
+@register("q_jaccard_pairs", oracle=_UNIGRAM_JACCARD_SQL)
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X-LLM-2 on a bounded candidate set (doc_id < 500 keeps the
     quadratic rung scale-stable across sf dirs)."""
@@ -413,26 +428,15 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ngram_jaccard",
     oracle=f"""
-    WITH grams AS (
+    WITH toks AS (
         SELECT doc_id,
                unnest(list_distinct(list_transform(
                    generate_series(1, len(string_split(text, ' ')) - 1),
                    i -> string_split(text, ' ')[i] || ' '
                         || string_split(text, ' ')[i + 1]))) AS tok
         FROM documents WHERE doc_id < {DOC_CAP}
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id
-    ), shared AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        FROM grams a JOIN grams b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT d1, d2,
-           round(c * 1.0 / (s1.n + s2.n - c), 6) AS jaccard
-    FROM shared
-    JOIN sizes s1 ON s1.doc_id = d1
-    JOIN sizes s2 ON s2.doc_id = d2
-    WHERE round(c * 1.0 / (s1.n + s2.n - c), 6) >= 0.2
+    ), {jaccard_pairs_cte_sql(0.2)}
+    SELECT d1, d2, jaccard FROM pairs
     """,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,27 +514,7 @@ def jaccard_pairs_prefix(docs: DataFrame, tau: float) -> DataFrame:
     return _jaccard_filter(_candidate_shared(cand, toks), toks, tau)
 
 
-@register(
-    "q_jaccard_prefix",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
-        FROM documents WHERE doc_id < {DOC_CAP}
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id
-    ), shared AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT d1, d2,
-           round(c * 1.0 / (s1.n + s2.n - c), 6) AS jaccard
-    FROM shared
-    JOIN sizes s1 ON s1.doc_id = d1
-    JOIN sizes s2 ON s2.doc_id = d2
-    WHERE round(c * 1.0 / (s1.n + s2.n - c), 6) >= {JACCARD_TAU}
-    """,
-)
+@register("q_jaccard_prefix", oracle=_UNIGRAM_JACCARD_SQL)
 def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X-LLM-2 scale algorithm: prefix-filtered exact Jaccard — the
     oracle is the brute-force inverted-index SQL, proving the filter

@@ -2,9 +2,10 @@
 
 Media are opaque ``binary`` payloads with typed metadata structs; all
 Spark-side plumbing (schema, partitioning, Arrow batch shape) is real.
-The container has no image/audio libs, so the *decode* step is a
-deterministic fake behind an import-try (clearly marked) — swapping in
-PIL/librosa changes only the inner function, not the plan.
+The *decode* step is a deterministic stand-in (``_decode_fake``, byte
+window means) and the only decode path, whatever image libraries are
+installed — swapping in PIL/librosa changes only that function, not
+the plan.
 
 The media table is synthesized deterministically from `documents`
 (payload = UTF-8 bytes of text; metadata derived from n_chars/source),
@@ -66,15 +67,6 @@ FEATURE_SCHEMA = StructType([
 N_FEATURES = 4
 
 
-def _decode_real(payload: bytes):  # pragma: no cover - libs absent here
-    """The real decode path — requires an image library the container
-    doesn't ship. Kept so the seam is explicit."""
-    raise NotImplementedError(
-        "image decode requires PIL/opencv; container ships neither — "
-        "the deterministic fake below exercises the identical plumbing"
-    )
-
-
 def _decode_fake(payload: bytes) -> list[float] | None:
     """Deterministic stand-in for decode→feature-extract: chunk the
     bytes into N_FEATURES windows and take per-window byte means
@@ -94,36 +86,30 @@ def _decode_fake(payload: bytes) -> list[float] | None:
     return out[:N_FEATURES]
 
 
+def _feature_batches(
+        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body of extract_features: one output row per media
+    row (module-level so it can be called on a plain pandas batch)."""
+    import numpy as np
+
+    for pdf in batches:
+        payloads = pdf["payload"]
+        yield pd.DataFrame({
+            "media_id": pdf["media_id"],
+            "n_bytes": payloads.map(len),
+            "mean_byte": [
+                float(np.frombuffer(p, dtype=np.uint8).mean()) if p else None
+                for p in payloads
+            ],
+            "features": [_decode_fake(p) for p in payloads],
+        })
+
+
 def extract_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract as mapInPandas: Arrow-batched, schema
     pinned, one output row per media row. The pandas batch is the unit
     of work an executor core processes — no driver involvement."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:  # the real decoder would be imported here
-            import PIL  # noqa: F401
-            decode = _decode_real
-        except ImportError:
-            decode = None  # deterministic fake path
-        import numpy as np
-
-        for pdf in batches:
-            payloads = pdf["payload"]
-            feats = [
-                _decode_fake(p) if decode is None else decode(p)
-                for p in payloads
-            ]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "n_bytes": payloads.map(len),
-                "mean_byte": [
-                    float(np.frombuffer(p, dtype=np.uint8).mean()) if p else None
-                    for p in payloads
-                ],
-                "features": feats,
-            })
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return media.mapInPandas(_feature_batches, schema=FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType([

@@ -252,8 +252,8 @@ def ann_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int, *,
     # the unit-vec projection materializes instead of re-inlining into
     # every consumer (same rationale as ann_ivf_topk / semantic_dedup).
     # managed: released post-consumption via lineage.release_cuts;
-    # memoized/caller-persisted frames are skipped, keeping their own
-    # lifecycle (the `ours` guard)
+    # managed_persist skips frames already cached, so memoized or
+    # caller-persisted frames keep their own lifecycle
     vectors = managed_persist(vectors)
     bands = lsh_band_keys(vectors)
     if queries_subset_of_vectors:
@@ -588,8 +588,8 @@ def ann_ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
     # spillable, and the cached fragment substitutes into the queries
     # frame too (it is a filter over the same corpus plan). Managed:
     # released post-consumption via lineage.release_cuts; the memoized
-    # corpus keeps its own session lifecycle (the `ours` guard skips
-    # already-persisted frames).
+    # corpus keeps its own session lifecycle (managed_persist skips
+    # frames already cached).
     vectors = managed_persist(vectors)
     if cent is None:
         cent = ivf_centroids(vectors)

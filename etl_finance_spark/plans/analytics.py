@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
-from etl_finance_spark.plans.graph import ITEMS_CTE_SQL as _GRAPH_ITEMS_CTE
-from etl_finance_spark.plans.graph import MIN_ORDERS as _GRAPH_MIN_ORDERS
+from etl_finance_spark.plans.graph import EDGES_CTE_SQL as _GRAPH_EDGES_CTE
 from etl_finance_spark.registry import register
 
 
@@ -458,18 +457,7 @@ def q_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_copurchase_pairs",
-    # threshold + mega-basket cap interpolated from plans/graph.py so
-    # the oracle can never drift from the shared edge build all three
-    # graph queries read
-    oracle=f"""
-    WITH {_GRAPH_ITEMS_CTE}
-    SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS n_orders
-    FROM items a
-    JOIN items b ON a.l_orderkey = b.l_orderkey
-                AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING count(*) >= {_GRAPH_MIN_ORDERS}
-    """,
+    oracle=f"WITH {_GRAPH_EDGES_CTE} SELECT p1, p2, n_orders FROM e",
 )
 def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: part pairs appearing together in at

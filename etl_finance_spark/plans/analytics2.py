@@ -21,11 +21,10 @@ from etl_finance_spark.registry import register
 
 PR_ITERS = 3
 PR_DAMP = 0.85
-# the co-purchase edge threshold IS the shared build's (plans/graph.py):
-# importing it keeps the unrolled-CTE oracle below from ever drifting
-# from the Spark side, which reads copurchase_edges directly
-from etl_finance_spark.plans.graph import ITEMS_CTE_SQL as PR_ITEMS_CTE
-from etl_finance_spark.plans.graph import MIN_ORDERS as PR_MIN_ORDERS
+# the co-purchase edges ARE the shared build's (plans/graph.py):
+# importing its SQL twin keeps the unrolled-CTE oracle below from ever
+# drifting from the Spark side, which reads copurchase_edges directly
+from etl_finance_spark.plans.graph import EDGES_CTE_SQL as PR_EDGES_CTE
 
 
 def _pagerank_oracle() -> str:
@@ -33,12 +32,7 @@ def _pagerank_oracle() -> str:
     exact computation the Spark loop performs, so the iterative rung is
     hash-checked, not rows-only."""
     head = f"""
-    WITH {PR_ITEMS_CTE}, e AS (
-        SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= {PR_MIN_ORDERS}
-    ), sym AS (
+    WITH {PR_EDGES_CTE}, sym AS (
         SELECT p1 AS src, p2 AS dst FROM e
         UNION ALL SELECT p2, p1 FROM e
     ), nodes AS (
@@ -94,9 +88,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     r3: that broadcast grows with |nodes| — an OOM class at 100 TB).
     Nothing ever collects to the driver. The graph is symmetric so no
     dangling-mass term is needed (every node has out-degree >= 1).
-    Reads the session's shared co-purchase graph build (plans/graph.py,
-    threshold MIN_ORDERS == PR_MIN_ORDERS) — one materialization serves
-    this, q_copurchase_pairs and q_triangle_count. The algorithm itself
+    Reads the session's shared co-purchase graph build (plans/graph.py)
+    — one materialization serves this, q_copurchase_pairs and
+    q_triangle_count. The algorithm itself
     is :func:`etl_finance_spark.operators.graphs.pagerank`
     (property-tested against a Python power-iteration reference)."""
     from etl_finance_spark.operators.graphs import pagerank

@@ -10,13 +10,12 @@ warehouse-side consumers of the pipelines the reference ships.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
-from etl_finance_spark.plans.graph import ITEMS_CTE_SQL as _GRAPH_ITEMS_CTE
-from etl_finance_spark.plans.graph import MIN_ORDERS as _GRAPH_MIN_ORDERS
+from etl_finance_spark.plans.graph import EDGES_CTE_SQL as _GRAPH_EDGES_CTE
 from etl_finance_spark.registry import register
 
 SESSION_GAP_S = 1800  # 30-minute inactivity closes a session
@@ -258,14 +257,8 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_triangle_count",
-    # threshold interpolated from plans/graph.py (shared edge build)
     oracle=f"""
-    WITH {_GRAPH_ITEMS_CTE}, e AS (
-        SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= {_GRAPH_MIN_ORDERS}
-    )
+    WITH {_GRAPH_EDGES_CTE}
     SELECT CAST(count(*) AS BIGINT) AS n_triangles
     FROM e e1
     JOIN e e2 ON e2.p1 = e1.p2
@@ -290,10 +283,13 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                           .select("p1", "p2"))
 
 
-@register(
-    "q_ewma",
-    oracle="""
-    WITH daily AS (
+# Each user's daily total value in exact MICRO-units, day-sorted: the
+# series both fixed-point folds (q_ewma here, q_macd in plans/finance.py)
+# run over, stated once per engine. The DuckDB side is the ``daily`` and
+# ``arr`` (ds, xs lists) CTE bodies. It lives here, not in finance.py,
+# because this module registers first: finance importing it keeps the
+# registration order.
+DAILY_MICRO_CTE_SQL = """daily AS (
         SELECT user_id,
                CAST(floor(epoch(date_trunc('day',
                    date_trunc('microseconds', ts)))) AS BIGINT) AS day_s,
@@ -305,7 +301,30 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
                list(day_s ORDER BY day_s) AS ds,
                list(xm ORDER BY day_s) AS xs
         FROM daily GROUP BY user_id
+    )"""
+
+
+def daily_micro_series(spark: SparkSession,
+                       sf_dir: str) -> tuple[DataFrame, Column]:
+    """The Spark side of DAILY_MICRO_CTE_SQL: ``(arr, xs)`` where
+    ``arr`` is (user_id, sx) with ``sx`` the day-sorted array of
+    (day_s, xm) structs, and ``xs`` the column of its xm values."""
+    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    day = F.date_trunc("day", F.col("ts"))
+    micro = F.round(F.col("value") * 1000000).cast("long")
+    daily = ev.groupBy(
+        "user_id", F.unix_timestamp(day).alias("day_s")
+    ).agg(F.sum(micro).alias("xm"))
+    arr = daily.groupBy("user_id").agg(
+        F.array_sort(F.collect_list(F.struct("day_s", "xm"))).alias("sx")
     )
+    return arr, F.col("sx").getField("xm")
+
+
+@register(
+    "q_ewma",
+    oracle=f"""
+    WITH {DAILY_MICRO_CTE_SQL}
     SELECT user_id,
            unnest(ds) AS day_s,
            unnest(list_transform(xs, v -> v / 1000000.0)) AS x,
@@ -338,16 +357,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     rung. At unbounded series length this swaps to the
     applyInPandasWithState form (streaming/stateful.py) with the fold
     as running state."""
-    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))
-    micro = F.round(F.col("value") * 1000000).cast("long")
-    daily = ev.groupBy(
-        "user_id", F.unix_timestamp(day).alias("day_s")
-    ).agg(F.sum(micro).alias("xm"))
-    arr = daily.groupBy("user_id").agg(
-        F.array_sort(F.collect_list(F.struct("day_s", "xm"))).alias("sx")
-    )
-    xs = F.col("sx").getField("xm")
+    arr, xs = daily_micro_series(spark, sf_dir)
     # (3v + 7acc)/10 in double space is exact for the floor: operands
     # stay < 2^53 and the fractional part of n/10 is never within 1e-5
     # of 1, so floor() recovers the integer quotient precisely.

@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_finance_spark.catalog import table
+from etl_finance_spark.plans.analytics3 import (
+    DAILY_MICRO_CTE_SQL, daily_micro_series,
+)
 from etl_finance_spark.registry import register
 
 _DAILY_CENTS = """
@@ -395,25 +398,10 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAILY_MICRO = """
-    SELECT user_id,
-           CAST(floor(epoch(date_trunc('day',
-               date_trunc('microseconds', ts)))) AS BIGINT) AS day_s,
-           sum(CAST(round(value * 1000000, 0) AS BIGINT)) AS xm
-    FROM events WHERE value IS NOT NULL
-    GROUP BY 1, 2
-"""
-
-
 @register(
     "q_macd",
     oracle=f"""
-    WITH daily AS ({_DAILY_MICRO}), arr AS (
-        SELECT user_id,
-               list(day_s ORDER BY day_s) AS ds,
-               list(xm ORDER BY day_s) AS xs
-        FROM daily GROUP BY user_id
-    ), folded AS (
+    WITH {DAILY_MICRO_CTE_SQL}, folded AS (
         SELECT user_id,
                unnest(ds) AS day_s,
                unnest(list_transform(
@@ -448,16 +436,7 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles. One user_id shuffle; per-user series are bounded (the
     collect_sorted contract), and the unbounded-stream form is the
     applyInPandasWithState fold (streaming/stateful.py)."""
-    ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    day = F.date_trunc("day", F.col("ts"))
-    micro = F.round(F.col("value") * 1000000).cast("long")
-    daily = ev.groupBy(
-        "user_id", F.unix_timestamp(day).alias("day_s")
-    ).agg(F.sum(micro).alias("xm"))
-    arr = daily.groupBy("user_id").agg(
-        F.array_sort(F.collect_list(F.struct("day_s", "xm"))).alias("sx")
-    )
-    xs = F.col("sx").getField("xm")
+    arr, xs = daily_micro_series(spark, sf_dir)
 
     def _ema_fold(mul_v: int, mul_a: int, div: int):
         return F.transform(

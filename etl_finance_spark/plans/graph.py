@@ -23,7 +23,7 @@ every consumer reads the materialization. This helper is that seam:
   explode. Market-basket practice caps or discards such baskets as
   non-signal; the cap rides far above organic basket sizes (fixtures
   max out at 17 distinct parts; the TPC-H spec caps at 7 lines).
-  Applied identically in the DuckDB oracles via ``ITEMS_CTE_SQL`` —
+  Applied identically in the DuckDB oracles via ``EDGES_CTE_SQL`` —
   capped semantics are THE semantics, not a Spark-side approximation;
 - ``.persist()``-ed (MEMORY_AND_DISK — evictable and spillable, unlike
   a checkpoint) and memoized per (applicationId, sf_dir), so the three
@@ -47,15 +47,22 @@ from etl_finance_spark.memo import session_memo
 MIN_ORDERS = 2  # co-purchase edge threshold shared by all three consumers
 MAX_BASKET = 256  # mega-basket guard; see module docstring
 
-# The capped item set as a DuckDB CTE body — every graph-query oracle
-# interpolates this one string, so the Spark build and the three
-# oracles can never drift apart.
+# The capped item set as a DuckDB CTE body, and the thresholded edges
+# ``e(p1, p2, n_orders)`` over it — the SQL twin of edges_from_items.
+# Every graph-query oracle interpolates these strings, so the Spark
+# build and the oracles can never drift apart.
 ITEMS_CTE_SQL = f"""items AS (
         SELECT l_orderkey, l_partkey FROM (
             SELECT l_orderkey, l_partkey,
                    count(*) OVER (PARTITION BY l_orderkey) AS bsz
             FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
         ) WHERE bsz <= {MAX_BASKET}
+    )"""
+EDGES_CTE_SQL = f"""{ITEMS_CTE_SQL}, e AS (
+        SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS n_orders
+        FROM items a JOIN items b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2 HAVING count(*) >= {MIN_ORDERS}
     )"""
 
 _EDGE_MEMO: dict[tuple[str, str], DataFrame] = {}

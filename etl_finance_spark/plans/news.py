@@ -84,13 +84,8 @@ def transform_news(df: DataFrame) -> DataFrame:
     )
 
 
-def load_news(spark: SparkSession, df: DataFrame, target: str,
-              keywords_as_json: bool = False) -> None:
-    """R-SNK-2 + R-JSON-1 (etl.py:322-341): keyed upsert; keywords
-    serialize to JSON text only for egress formats without native
-    arrays (the reference's MySQL JSON column, etl.py:333)."""
-    if keywords_as_json:
-        df = df.withColumn("keywords", F.to_json("keywords"))
+def load_news(spark: SparkSession, df: DataFrame, target: str) -> None:
+    """R-SNK-2 (etl.py:322-341): keyed upsert on UPSERT_KEYS."""
     write_upsert(spark, df, target, UPSERT_KEYS)
 
 

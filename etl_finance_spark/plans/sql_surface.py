@@ -21,31 +21,38 @@ from pyspark.sql import functions as F
 
 from etl_finance_spark.catalog import table
 from etl_finance_spark.lineage import cut_lineage
-from etl_finance_spark.plans.graph import basket_pairs
+from etl_finance_spark.plans.graph import ITEMS_CTE_SQL, edges_from_items
 from etl_finance_spark.registry import register
 
-# Shared verbatim by the Spark query and the DuckDB oracle: identical
-# SQL text is the strongest possible parity statement for the recursive
-# iteration semantics (seed row, per-level join expansion, UNION ALL
-# accumulation, post-hoc min-depth dedup).
-_BFS_SQL = """
-WITH RECURSIVE edges AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  WHERE a.l_orderkey % 10 = 0
-),
-bfs(pk, depth) AS (
-    SELECT CAST(min(l_partkey) AS BIGINT) AS pk, 0 AS depth
-    FROM lineitem WHERE l_orderkey % 10 = 0
+# The recursion both engines run: seed row, per-level join expansion,
+# UNION ALL accumulation, post-hoc min-depth dedup. Spark binds
+# {seed} and {edges} to DataFrame arguments (_BFS_RECURSE_SQL); the
+# oracle binds them to CTEs over the same capped, order-sampled items
+# (_BFS_SQL).
+_BFS_RECURSION = """bfs(pk, depth) AS (
+    SELECT pk, 0 AS depth FROM {seed}
   UNION ALL
     SELECT e.dst, b.depth + 1
-    FROM bfs b JOIN edges e ON e.src = b.pk
+    FROM bfs b JOIN {edges} e ON e.src = b.pk
     WHERE b.depth < 2
 )
 SELECT pk, CAST(min(depth) AS BIGINT) AS depth
 FROM bfs GROUP BY pk
 """
+_BFS_RECURSE_SQL = "\nWITH RECURSIVE " + _BFS_RECURSION
+_BFS_SQL = f"""
+WITH RECURSIVE {ITEMS_CTE_SQL},
+edges AS (
+  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+  WHERE a.l_orderkey % 10 = 0
+),
+seed AS (
+  SELECT CAST(min(l_partkey) AS BIGINT) AS pk
+  FROM lineitem WHERE l_orderkey % 10 = 0
+),
+""" + _BFS_RECURSION.format(seed="seed", edges="edges")
 
 _LATERAL_SQL = """
 SELECT n_name, x.c_name, x.bal
@@ -65,19 +72,6 @@ def _register_views(spark: SparkSession, sf_dir: str,
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-_BFS_RECURSE_SQL = """
-WITH RECURSIVE bfs(pk, depth) AS (
-    SELECT pk, 0 AS depth FROM {seed}
-  UNION ALL
-    SELECT e.dst, b.depth + 1
-    FROM bfs b JOIN {edges} e ON e.src = b.pk
-    WHERE b.depth < 2
-)
-SELECT pk, CAST(min(depth) AS BIGINT) AS depth
-FROM bfs GROUP BY pk
-"""
-
-
 @register("q_recursive_bfs", oracle=_BFS_SQL)
 def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Breadth-first reachability over the co-purchase graph via WITH
@@ -90,34 +84,21 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first level: each later level is then one hash join against
     settled data instead of a re-derived self-join.
     Bounds that keep recursion sane are explicit: order-sampled edges
-    (1/10), depth ≤ 2, min-depth dedup at the end. (The edge build
-    here is a demonstration subgraph; a production co-purchase edge
-    list comes from plans/graph.py, which also carries the MAX_BASKET
-    mega-order guard on the quadratic pair fan-out.) UNBOUNDED closure
-    this way is exponential in path count — full-graph reachability at
-    100 TB belongs to the delta-checked connected-components fixpoint
-    (llm/clusters.py), which this query exists to contrast. The
-    oracle runs the same logic as one self-contained SQL text (DuckDB
-    evaluates each CTE once, so it needs no materialization hint)."""
+    (1/10), depth ≤ 2, min-depth dedup at the end. The edges come from
+    plans/graph.py's basket build (``edges_from_items``, any repeat
+    count), so the MAX_BASKET mega-order guard holds on both engines.
+    UNBOUNDED closure this way is exponential in path count —
+    full-graph reachability at 100 TB belongs to the delta-checked
+    connected-components fixpoint (llm/clusters.py), which this query
+    exists to contrast. The oracle runs the same recursion as one
+    self-contained SQL text (DuckDB evaluates each CTE once, so it
+    needs no materialization hint)."""
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 10 == 0
     )
-    # same-order edges via per-order baskets (r14, the plans/graph.py
-    # shape): one exchange builds the sorted distinct part set per
-    # order, the src < dst pairs generate row-locally, the distinct is
-    # the second and last exchange, and both directions come from a
-    # union of the distinct canonical pairs (ReusedExchange — the swap
-    # branch re-reads the same aggregate). The prior order-keyed
-    # self-join + directed distinct spent three exchanges and scanned
-    # the slice twice for the identical edge set.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    canon = (
-        baskets.select(F.explode(basket_pairs("src", "dst")).alias("pr"))
-        .select("pr.src", "pr.dst")
-        .distinct()
-    )
+    canon = edges_from_items(
+        li.select("l_orderkey", "l_partkey"), min_orders=1
+    ).select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
     edges = cut_lineage(canon.union(
         canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ))

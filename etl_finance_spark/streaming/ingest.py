@@ -116,18 +116,7 @@ def read_batch_dirs(spark: SparkSession, out: str, schema) -> DataFrame:
     try:
         return spark.read.schema(schema).parquet(f"{out}/b*")
     except AnalysisException as e:
-        # Prefer the structured error condition (stable API) over the
-        # rendered message, which is just a formatting detail: Spark 4
-        # names it getCondition(), older builds getErrorClass(). The
-        # substring check stays as a last-resort fallback for builds
-        # where neither accessor exists.
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        cond = getter() if getter is not None else None
-        if (cond == "PATH_NOT_FOUND") or (
-            cond is None and "PATH_NOT_FOUND" in str(e)
-        ):
+        if e.getCondition() == "PATH_NOT_FOUND":
             return spark.createDataFrame([], schema)
         raise
 

@@ -429,6 +429,26 @@ def test_multimodal_empty_payload_yields_null(spark):
     assert rows[1].mean_byte == float(sum(b"abc")) / 3
 
 
+def test_multimodal_features_ignore_an_installed_image_library(monkeypatch):
+    """The deterministic decoder is the only decode path: with a PIL
+    module importable, the batch body still yields the byte-window
+    features instead of failing in a half-wired real decoder."""
+    import sys
+    import types
+
+    import pandas as pd
+
+    from etl_finance_spark.llm.multimodal import (
+        _decode_fake, _feature_batches,
+    )
+
+    monkeypatch.setitem(sys.modules, "PIL", types.ModuleType("PIL"))
+    pdf = pd.DataFrame({"media_id": [1, 2], "payload": [b"abcdefgh", b""]})
+    (out,) = list(_feature_batches(iter([pdf])))
+    assert out["features"].tolist() == [_decode_fake(b"abcdefgh"), None]
+    assert out["n_bytes"].tolist() == [8, 0]
+
+
 def test_pack_contexts_invariants(spark):
     """Packing layout: offsets are contiguous within each shard (each
     doc starts where the previous ended), chunk_pos < CTX_LEN, and

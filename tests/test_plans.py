@@ -653,18 +653,43 @@ def test_mega_basket_guard_bounds_pair_fanout(spark):
     assert uncapped.count() == 1 + n_mega_pairs
 
 
+def test_recursive_bfs_edge_build_caps_mega_baskets(spark, monkeypatch):
+    """q_recursive_bfs builds its edges with plans/graph.py's
+    edges_from_items, so the MAX_BASKET filter sits between the basket
+    aggregate and the pair explode, and the build keeps two exchanges
+    per union branch (baskets by order, pairs by (p1, p2)). The lineage
+    cut is bypassed so the edge build itself is visible."""
+    from etl_finance_spark.plans import sql_surface
+    from etl_finance_spark.plans.graph import MAX_BASKET
+
+    built = []
+    monkeypatch.setattr(sql_surface, "cut_lineage",
+                        lambda df: built.append(df) or df)
+    SPECS["q_recursive_bfs"].fn(spark, SF_CORRECT)
+    (edges,) = built
+    plan = explain_simple(spark, edges)
+    assert re.search(
+        rf"Filter \(size\(parts#\d+, (true|false)\) <= {MAX_BASKET}\)", plan
+    ), plan
+    assert plan.count("Exchange hashpartitioning") == 4, plan
+
+
 def test_graph_oracles_share_the_capped_items_cte():
     """All three co-purchase consumers' oracles must interpolate the
-    ONE items-CTE string from plans/graph.py (threshold + MAX_BASKET
-    guard) — a hand-rewritten oracle would silently fork the
-    semantics the Spark side implements."""
-    from etl_finance_spark.plans.graph import ITEMS_CTE_SQL, MAX_BASKET
+    ONE edges-CTE string from plans/graph.py (threshold + MAX_BASKET
+    guard), and q_recursive_bfs's the capped items CTE — a
+    hand-rewritten oracle would silently fork the semantics the Spark
+    side implements."""
+    from etl_finance_spark.plans.graph import (
+        EDGES_CTE_SQL, ITEMS_CTE_SQL, MAX_BASKET,
+    )
 
     assert f"bsz <= {MAX_BASKET}" in ITEMS_CTE_SQL
     for name in ("q_copurchase_pairs", "q_pagerank", "q_triangle_count"):
-        assert ITEMS_CTE_SQL in SPECS[name].oracle, (
-            f"{name} oracle no longer embeds the shared capped-items CTE"
+        assert EDGES_CTE_SQL in SPECS[name].oracle, (
+            f"{name} oracle no longer embeds the shared edges CTE"
         )
+    assert ITEMS_CTE_SQL in SPECS["q_recursive_bfs"].oracle
 
 
 def test_lineage_cuts_route_through_the_seam():

@@ -549,9 +549,9 @@ def test_concurrent_queries_share_one_session_safely(spark):
     """Warehouse concurrency witness: a real deployment runs many
     queries on ONE SparkSession at once, so the session-shared state
     this repo touches at query-build time — fixture temp views
-    (catalog.register_views), per-call BFS view names, the
-    corpus/quantizer session memos, runtime conf sets in
-    catalog.table — must tolerate concurrent callers. Eight threads
+    (catalog.register_views), the temp views spark.sql makes for
+    DataFrame arguments, the corpus/quantizer session memos, runtime
+    conf sets in catalog.table — must tolerate concurrent callers. Eight threads
     run a mixed batch (SQL-over-views, recursive CTE, memoized ANN,
     iterative PageRank, the conf-dependent events scan) repeatedly and
     every result must match its serial baseline exactly."""
@@ -564,7 +564,7 @@ def test_concurrent_queries_share_one_session_safely(spark):
     names = [
         "q_pct_change_hourly",   # events scan: runtime nanos conf
         "q_lateral_topn",        # spark.sql over shared fixture views
-        "q_recursive_bfs",       # per-call unique temp views + drop
+        "q_recursive_bfs",       # spark.sql over DataFrame arguments
         "q_agg_gsets",           # register_views + spark.sql
         "q_ann_ivf_topk",        # session-memoized corpus + model
         "q_pagerank",            # lineage cuts + shared edge memo
